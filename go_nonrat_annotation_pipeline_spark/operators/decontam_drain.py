@@ -1,6 +1,5 @@
-"""Candidate-aware drain for the lossless exact pair join — round-12
-module (the frozen-module extension pattern: new functionality for
-``operators/decontam_ann.py`` lives here and imports it).
+"""Candidate-aware drain for the lossless exact pair join, built on
+``operators/decontam_ann.py``.
 
 ``refine_hot_cells`` (decontam_ann) re-splits cells by OCCUPANCY — the
 right knob when one cell holds a quadratic share of the corpus, and it

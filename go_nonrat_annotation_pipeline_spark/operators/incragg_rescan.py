@@ -27,9 +27,6 @@ rescan every group satisfies the buffer invariant again, so
 minbuf_maintain composes on the result unchanged — the registered E2E
 (plans/queries_minmax_rescan.py) attests maintain → rescan → maintain
 ≡ recompute.
-
-New module per the freeze rule: operators/incragg_minmax.py backs
-WINDOW_R11 rows and stays byte-identical this round.
 """
 
 from __future__ import annotations

@@ -1,7 +1,6 @@
 """Incremental JOIN view maintenance with DELETES (signed deltas).
 
-Extends operators/incrjoin.py (frozen this round — it backs attested
-window rows) from insert-only CDC to full insert/delete feeds using the
+Extends operators/incrjoin.py from insert-only CDC to full insert/delete feeds using the
 Z-relation (signed multiset) algebra of the classical IVM literature
 (Gupta & Mumick 1995; DBToaster, Koch et al. 2014): every row carries a
 sign (+1 insert, −1 retraction) and joins multiply signs, so with

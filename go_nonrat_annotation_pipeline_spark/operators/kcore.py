@@ -5,9 +5,8 @@ degree >= k — the standard "dense backbone" extraction (Seidman 1983,
 "Network structure and minimum degree"). Peeling computes it: delete
 every vertex with degree < k, recompute degrees, repeat to fixpoint.
 
-Distributed shape (new module — operators/graph.py is frozen and backs
-driver-window rows; this imports nothing from it, sharing only the
-edges(a,b) convention):
+Distributed shape (this imports nothing from operators/graph.py,
+sharing only the edges(a,b) convention):
 
 - each round is ONE degree aggregate over the oriented edge table
   (explode both directions → groupBy node) plus TWO semi joins

@@ -1,4 +1,4 @@
-"""Exact top-k cosine join via lossless cell bounds — round-12 module.
+"""Exact top-k cosine join via lossless cell bounds.
 
 Completes the exact-acceleration matrix built on
 ``operators/decontam_ann.py``'s cells: threshold self-join

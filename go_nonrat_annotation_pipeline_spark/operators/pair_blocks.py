@@ -1,5 +1,4 @@
-"""Blocked exact cosine pair-candidate generation — r13 optimization
-round module.
+"""Blocked exact cosine pair-candidate generation.
 
 The exact-pairs family (dedup_embedding_exact_pairs and its drained /
 incremental / DBSCAN relatives) generated candidates as a row-per-pair
@@ -56,7 +55,10 @@ both-directions canonicalization as the per-cell form). Entries of
 a super-block that belong to non-compat cell pairs are merely extra
 computed dots — anything they emit above t - _SLACK is re-ranked by
 the caller's oracle-exact cosine, so results are branch-agnostic.
-Both branches yield (vec_id_a, vec_id_b, va, vb).
+The cost of coarsening is dot work: a super-block computes every dot
+between its two groups, so on a dense compatibility graph the total
+tends to alpha * N^2 (alpha = share of group pairs formed) rather than
+the per-cell-pair sum. Both branches yield (vec_id_a, vec_id_b, va, vb).
 """
 
 from __future__ import annotations
@@ -97,9 +99,9 @@ def block_candidate_pairs(
     """(vec_id_a, vec_id_b, va, vb) with vec_id_a < vec_id_b and kernel
     cosine >= threshold - _SLACK — a provable SUPERSET of every pair
     whose rounded expression cosine reaches ``threshold`` (module doc),
-    from one numpy matmul per compatible (ca, cb) cell block, carrying
-    both vectors so the caller can re-rank with the oracle-exact
-    expression cosine without further joins.
+    from one numpy matmul per compatible (ca, cb) cell block. The kernel
+    emits id pairs only; two id -> vector joins then attach both vectors
+    so the caller can re-rank with the oracle-exact expression cosine.
 
     ``assigned`` must carry (id_col, vec_col, cell_col); ``full_cells``
     is the (cell_id, centroid, max_residual) table the compatibility
@@ -120,14 +122,14 @@ def block_candidate_pairs(
     never does — so that module keeps the direct form.
     """
     spark = assigned.sparkSession
-    compat_d = compatible_cell_pairs(full_cells, threshold, with_dist=True)
-    if not compat_d:
+    compat = compatible_cell_pairs(full_cells, threshold)
+    if not compat:
         return spark.createDataFrame(
             [],
             "vec_id_a long, vec_id_b long, "
             "va array<double>, vb array<double>",
         )
-    if len(compat_d) > _MAX_BLOCKS:
+    if len(compat) > _MAX_BLOCKS:
         # fired-drain regime (r14): coarsen to super-group blocks —
         # module doc REGIME BRANCH. Keys are (ga, gb) group pairs
         # derived from the compat pairs; each cell maps to the block
@@ -136,7 +138,7 @@ def block_candidate_pairs(
         # partner cell.
         ids_all = [int(cid) for cid, _, _ in full_cells]
         g = _cell_groups(ids_all, math.ceil(math.sqrt(len(ids_all))))
-        super_pairs = sorted({(g[ca], g[cb]) for ca, cb, _ in compat_d})
+        super_pairs = sorted({(g[ca], g[cb]) for ca, cb in compat})
         by_ga: dict[int, list[int]] = {}
         by_gb: dict[int, list[int]] = {}
         for ga, gb in super_pairs:
@@ -155,8 +157,8 @@ def block_candidate_pairs(
     else:
         # unfired regime: per-cell blocks, keyed on the compat pair
         # itself (ca, cb) — few and big by the k <= 64 bound
-        key_rows_l = [(int(a), int(a), int(b)) for a, b, _ in compat_d]
-        key_rows_r = [(int(b), int(a), int(b)) for a, b, _ in compat_d]
+        key_rows_l = [(int(a), int(a), int(b)) for a, b in compat]
+        key_rows_r = [(int(b), int(a), int(b)) for a, b in compat]
     # two independent frames from the same driver-side list: lhs and
     # rhs must not share the key lineage or the cogroup trips the
     # ambiguous-self-join analyzer check

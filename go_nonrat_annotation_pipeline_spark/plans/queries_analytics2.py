@@ -1,5 +1,4 @@
-"""Timed funnel, equi-depth binning, per-group mode — round-13
-module, registered AFTER WINDOW_R13 (leads round 14).
+"""Timed funnel, equi-depth binning, per-group mode.
 
 - ``q_funnel_within``: the TIME-CONSTRAINED funnel the first-touch
   funnel (``q_funnel_ordered``) cannot express — for every view, was

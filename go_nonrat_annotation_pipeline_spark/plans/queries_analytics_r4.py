@@ -1,9 +1,4 @@
-"""Round-4 analytics additions: decimal-exact outlier detection and
-ordered-funnel analysis — registered AFTER the round-4 correctness
-window (plans/registry.py); verified by tools/compare.py locally this
-round, lead the round-5 rotation. Separate module so the attested
-queries_analytics.py stays byte-identical to its green round.
-"""
+"""Decimal-exact outlier detection and ordered-funnel analysis."""
 
 from __future__ import annotations
 

@@ -1,6 +1,4 @@
-"""ANN index-quality evaluation (recall@k) — registered AFTER the
-round-6 window (plans/registry.py); verified by tools/compare.py
-locally this round, leads the round-7 rotation.
+"""ANN index-quality evaluation (recall@k).
 
 The operational question every ANN deployment asks: how much recall
 does the bucketing give up, and does OR-amplification buy it back?

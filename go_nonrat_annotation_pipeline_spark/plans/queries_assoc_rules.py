@@ -1,5 +1,4 @@
-"""Association rules over order baskets (A-priori pruned) —
-round-13 module, registered AFTER WINDOW_R13 (leads round 14).
+"""Association rules over order baskets (A-priori pruned).
 
 Market-basket mining, the classical co-occurrence operator the PMI
 collocations row covers for text but nothing covers for transactions:

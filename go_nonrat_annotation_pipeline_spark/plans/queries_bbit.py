@@ -1,5 +1,4 @@
-"""b-bit minwise hashing — round-7 trailing module, registered AFTER
-WINDOW_R7.
+"""b-bit minwise hashing.
 
 Li & König (2010): storing only the lowest b bits of each MinHash
 component shrinks the persisted dedup state ~16× (64-bit → 4-bit per

@@ -1,5 +1,4 @@
-"""Benford first-digit analysis — round-13 module, registered AFTER
-WINDOW_R13 (leads round 14).
+"""Benford first-digit analysis.
 
 Data-quality screen on numeric columns: naturally-occurring amounts
 follow Benford's law P(d) = log10(1 + 1/d); strong deviation flags

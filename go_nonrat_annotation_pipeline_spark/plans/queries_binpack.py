@@ -1,5 +1,4 @@
-"""Whole-document FFD bin-packing queries (operators/binpack.py) —
-round-7 trailing module, registered AFTER WINDOW_R7.
+"""Whole-document FFD bin-packing queries (operators/binpack.py).
 
 The per-document assignment itself is hash-attested (5k rows at the
 driver SF), which pins every placement decision of the greedy fold —

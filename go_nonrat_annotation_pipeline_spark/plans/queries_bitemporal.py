@@ -1,5 +1,4 @@
-"""Bitemporal history queries (operators/bitemporal.py) — round-10
-trailing module, registered AFTER WINDOW_R10; leads round 11.
+"""Bitemporal history queries (operators/bitemporal.py).
 
 The assertion log is synthesized deterministically from the events
 table: each event ASSERTS the user's tracked attribute for a VALID day

@@ -1,6 +1,4 @@
-"""Boilerplate-removal queries (operators/boilerplate.py) — registered
-AFTER the round-6 window (plans/registry.py); verified by
-tools/compare.py locally this round, they lead the round-7 rotation.
+"""Boilerplate-removal queries (operators/boilerplate.py).
 
 CCNet-style chunk-hash dedup that REWRITES documents (q_chunk_dedup
 only counts): chunks occurring in more than ``_MAX_DOCS`` distinct

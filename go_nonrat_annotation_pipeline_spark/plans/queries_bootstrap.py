@@ -1,5 +1,4 @@
-"""Distributed Poisson bootstrap weights — round-7 trailing module,
-registered AFTER WINDOW_R7.
+"""Distributed Poisson bootstrap weights.
 
 Error bars on corpus statistics without resampling the corpus: the
 Poisson bootstrap (Chamandy et al., Google 2012) replaces "draw N rows

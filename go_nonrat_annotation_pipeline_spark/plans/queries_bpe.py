@@ -1,6 +1,4 @@
-"""Distributed BPE merge-training query (operators/bpe.py) — registered
-AFTER the round-4 correctness window (plans/registry.py); verified by
-tools/compare.py locally this round, leads the round-5 rotation.
+"""Distributed BPE merge-training query (operators/bpe.py).
 
 Oracle: the merge steps unroll as chained CTE blocks. Each step
 computes pair counts over the current symbol table, picks the argmax

@@ -1,5 +1,4 @@
-"""Batched BPE merge-training query (operators/bpe.bpe_train_batched) —
-round-5 addition, registered AFTER the correctness window.
+"""Batched BPE merge-training query (operators/bpe.bpe_train_batched).
 
 Classical BPE (q_bpe_merges) pays one driver round-trip per merge —
 fine at probe scale, latency-bound at a production vocab (n_merges ≈

@@ -1,5 +1,4 @@
-"""Token-budget water-filling queries (operators/budget.py) — round-7
-trailing module, registered AFTER WINDOW_R7.
+"""Token-budget water-filling queries (operators/budget.py).
 
 Per-source capacities are the curated corpus's whitespace-token totals;
 the budget is deliberately below the total so the waterline is real:

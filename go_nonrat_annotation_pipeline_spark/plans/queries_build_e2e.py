@@ -1,6 +1,4 @@
-"""Pre-training corpus BUILD composite — registered AFTER the round-6
-window (plans/registry.py); verified by tools/compare.py locally this
-round, leads the round-7 rotation.
+"""Pre-training corpus BUILD composite.
 
 The round-6 counterpart to corpus_curation_e2e (which cleans) and
 corpus_refresh_e2e (which maintains): this one BUILDS the training

@@ -1,6 +1,5 @@
 """Per-source quality calibration + curriculum queries
-(operators/calibrate.py) — registered AFTER the round-6 window;
-round-7 rotation candidates.
+(operators/calibrate.py).
 
 Rank-percentile calibration of a lexical-diversity score within each
 source (per-domain thresholds, CCNet/RefinedWeb posture), the top-slice

@@ -1,5 +1,4 @@
-"""Overlapping sliding-window chunking — round-7 trailing module,
-registered AFTER WINDOW_R7.
+"""Overlapping sliding-window chunking.
 
 Long-document preparation for embedding/retrieval pipelines: fixed
 window w with stride s < w, so consecutive chunks share w−s words of

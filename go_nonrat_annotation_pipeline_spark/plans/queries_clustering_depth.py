@@ -1,5 +1,4 @@
-"""File-clustering depth audit — round-10 trailing module, registered
-AFTER WINDOW_R10; leads round 11.
+"""File-clustering depth audit.
 
 The metric behind every OPTIMIZE/Z-ORDER decision (Delta clustering
 metrics, Snowflake's clustering_depth): per data file, how many files'

@@ -1,5 +1,4 @@
-"""Cohort retention analytics over `events` — round-7 trailing module,
-registered AFTER WINDOW_R7.
+"""Cohort retention analytics over `events`.
 
 The classic product-analytics matrix: users grouped by first-seen week
 (cohort), and for each later week the count still active — churn and

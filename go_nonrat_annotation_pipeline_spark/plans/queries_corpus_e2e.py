@@ -2,18 +2,10 @@
 ONE query — PII gate → quality gate → exact dedup → near-dup cluster
 collapse → benchmark decontamination → per-source funnel report.
 
-Registered AFTER the round-4 correctness window (plans/registry.py;
-window = first 50 entries); verified by tools/compare.py locally, it
-joins the round-5 rotation as a never-attested row.
-
 Every stage is an already-oracle-proven operator; this row attests the
 COMPOSITION (stage ordering, survivor threading, funnel accounting) the
 way pipeline_e2e_mouse attests the reference dataflow spine. Output is
 integers only (counts + exact token sums) — hash-proof by construction.
-
-Imports from queries_pii / queries_curation are safe for the window
-contract: registry.py imports both modules before this one, so nothing
-registers early (the ordering rule in plans/registry.py).
 
 Scale shape: the funnel flags come from LEFT JOINs of strictly
 shrinking id-sets back onto the pool — each join is id-key equi

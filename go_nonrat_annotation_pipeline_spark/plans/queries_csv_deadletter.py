@@ -1,5 +1,4 @@
-"""CSV dead-letter routing via PERMISSIVE corrupt-record parsing —
-round-7 trailing module, registered AFTER WINDOW_R7.
+"""CSV dead-letter routing via PERMISSIVE corrupt-record parsing.
 
 The format-side twin of q_json_dead_letter_report: a CSV feed is
 staged from the events table with deterministically injected defects

@@ -1,7 +1,5 @@
-"""CUBE / GROUPING SETS aggregates — round-10 trailing module,
-registered AFTER WINDOW_R10; leads round 11. Completes the
-grouping-sets family next to q_rollup_status_priority (that module is
-window-frozen this round, hence the separate trailing module).
+"""CUBE / GROUPING SETS aggregates. Completes the grouping-sets family
+next to q_rollup_status_priority.
 
 GROUPING_ID disambiguates a grouped-away dimension from a genuine NULL
 value in it — without it the two hash identically into the same output

@@ -1,9 +1,6 @@
 """Corpus-curation queries: leakage-safe splitting and benchmark
 decontamination — the two guards every training-data pipeline runs
-between dedup and dataset export. Both rows were driver-attested green
-in round 3 (window slots 48-49); since round 4 they sit after the
-50-entry correctness window on unchanged content (see plans/registry.py
-for the ordering contract and rotation plan).
+between dedup and dataset export.
 """
 
 from __future__ import annotations

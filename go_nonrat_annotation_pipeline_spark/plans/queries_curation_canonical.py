@@ -1,6 +1,4 @@
-"""Canonical-doc-per-cluster curation query — registered AFTER the
-round-4 correctness window (plans/registry.py); verified by
-tools/compare.py locally this round, leads the round-5 rotation.
+"""Canonical-doc-per-cluster curation query.
 
 The step a dedup pipeline runs after clustering: collapse each
 near-dup cluster to its best representative (here: most content,

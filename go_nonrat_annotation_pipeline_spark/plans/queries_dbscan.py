@@ -1,5 +1,4 @@
-"""Exact DBSCAN over embeddings — round-13 module, registered AFTER
-WINDOW_R13 (leads round 14).
+"""Exact DBSCAN over embeddings.
 
 Density-based clustering (Ester et al., KDD 1996) with the cosine
 eps-neighborhood: core = >= MINPTS neighbors at cosine >= eps, clusters

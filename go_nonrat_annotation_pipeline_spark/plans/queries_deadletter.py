@@ -1,5 +1,4 @@
-"""JSON dead-letter / quarantine ingestion queries — round-7 trailing
-module, registered AFTER WINDOW_R7.
+"""JSON dead-letter / quarantine ingestion queries.
 
 Every at-scale ingestion path needs a dead-letter lane: rows whose
 payload fails to parse must be counted and quarantined, never silently

@@ -1,5 +1,4 @@
-"""Benchmark-decontamination queries (operators/decontam.py) — round-9
-trailing module, registered AFTER WINDOW_R9; round-10 rotation fill.
+"""Benchmark-decontamination queries (operators/decontam.py).
 
 The benchmark is carved deterministically out of the documents table
 (doc_id % 29 = 0 plays the eval suite; the rest is the training

@@ -1,10 +1,5 @@
-"""Dedup queries first driver-attested green in round 1
-(CORRECTNESS_r01) — split from queries_dedup.py in round 3 to sit after
-the 50-entry correctness window; rotated BACK INSIDE the round-4 window
-(slots 16-20) because their round-1 green is the oldest attestation in
-the registry (rounds 2-3 never re-covered them). Query bodies unchanged
-since round 1. The shared pair-CTE body and constants stay in
-queries_dedup.py. See plans/registry.py for the ordering contract.
+"""Exact, MinHash-LSH and SimHash dedup queries. The shared pair-CTE
+body and constants live in queries_dedup.py.
 """
 
 from __future__ import annotations

@@ -1,6 +1,5 @@
 """Exact cosine-threshold near-dup pair join via lossless cell
-compatibility — round-11 module, registered AFTER WINDOW_R11 (leads
-round 12).
+compatibility.
 
 The embedding dedup family so far trades recall for speed (LSH
 hyperplane buckets, SimHash bands — probabilistic recall) or verifies

@@ -1,7 +1,6 @@
-"""Exact pair join with CANDIDATE-AWARE hot-cell drain — round-12
-module, registered AFTER WINDOW_R12 (leads round 13).
+"""Exact pair join with CANDIDATE-AWARE hot-cell drain.
 
-Twin of ``dedup_embedding_exact_pairs`` (frozen WINDOW_R12 row) whose
+Twin of ``dedup_embedding_exact_pairs`` whose
 drain triggers on each cell's candidate LOAD (n_c x compatible-partner
 occupancy, operators/decontam_drain.py) instead of raw occupancy. The
 r11 saturation case — 645M cell-level candidates at 40k rows, spread

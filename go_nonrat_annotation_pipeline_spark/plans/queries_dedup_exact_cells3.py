@@ -1,7 +1,6 @@
-"""Exact pair join with a TEST-SF-REACHABLE drain cap — round-13
-module, registered AFTER WINDOW_R13 (leads round 14).
+"""Exact pair join with a TEST-SF-REACHABLE drain cap.
 
-`dedup_embedding_exact_pairs_drained` (WINDOW_R13 row) carries the
+`dedup_embedding_exact_pairs_drained` carries the
 production 2M candidate-load cap, which is provably unreachable at
 every test SF (max ~40k load/cell measured at sf0.001-sf0.01, 500k
 worst-case at sf0.1) — so the driver has only ever attested that

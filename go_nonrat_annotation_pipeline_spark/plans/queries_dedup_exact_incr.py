@@ -1,5 +1,4 @@
-"""Incremental exact near-dup pair maintenance — round-12 module,
-registered AFTER WINDOW_R12 (leads round 13).
+"""Incremental exact near-dup pair maintenance.
 
 At 100 TB the corpus GROWS; re-running the exact pair self-join over
 everything per ingest is quadratic history. Insert-only maintenance of

@@ -1,6 +1,4 @@
-"""Incremental (continuous-ingestion) near-dup query — registered AFTER
-the round-4 correctness window (plans/registry.py); verified by
-tools/compare.py locally this round, leads the round-5 rotation.
+"""Incremental (continuous-ingestion) near-dup query.
 
 Split of `documents` into store (doc_id % 5 != 0) and incoming
 (doc_id % 5 == 0) batches; the operator checks incoming against the

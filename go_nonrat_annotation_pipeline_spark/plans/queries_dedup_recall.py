@@ -1,6 +1,4 @@
-"""Dedup candidate-generation quality eval — registered AFTER the
-round-6 window (plans/registry.py); verified by tools/compare.py
-locally this round, leads the round-7 rotation.
+"""Dedup candidate-generation quality eval.
 
 The dedup twin of q_ann_recall: how many true near-dup pairs does the
 MinHash-LSH banding miss? Ground truth is the exact shingle-Jaccard

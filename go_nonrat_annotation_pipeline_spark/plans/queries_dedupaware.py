@@ -1,5 +1,4 @@
-"""Dedup-aware sampling (cluster-downweighted selection) — round-7
-trailing module, registered AFTER WINDOW_R7.
+"""Dedup-aware sampling (cluster-downweighted selection).
 
 Dropping all-but-one near-duplicate (q_cluster_canonical) is the blunt
 instrument; training-mixture work (SlimPajama-style) instead KEEPS

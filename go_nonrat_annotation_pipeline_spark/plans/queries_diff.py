@@ -1,6 +1,4 @@
-"""Snapshot-diff (CDC) queries (operators/diff.py) — registered AFTER
-the round-4 correctness window (plans/registry.py); verified by
-tools/compare.py locally this round, lead the round-5 rotation.
+"""Snapshot-diff (CDC) queries (operators/diff.py).
 
 The two snapshots derive deterministically from `orders` so the diff
 exercises every branch: keys only in new (added), only in old

@@ -1,6 +1,4 @@
-"""DSIR importance-weighting queries (operators/dsir.py) — registered
-AFTER the round-6 window (plans/registry.py); verified by
-tools/compare.py locally this round, they lead the round-7 rotation.
+"""DSIR importance-weighting queries (operators/dsir.py).
 
 Target corpus = documents from sources src0/src1 (a deterministic 10%
 "curated domain" slice of the synthetic pool); raw = all documents.

@@ -1,7 +1,5 @@
 """Cross-doc duplicated-span queries (operators/dupspan.py, the
-exact-substring dedup of Lee et al. 2021) — registered AFTER the
-round-6 window (plans/registry.py); verified by tools/compare.py
-locally this round, candidates for the round-7 rotation."""
+exact-substring dedup of Lee et al. 2021)."""
 
 from __future__ import annotations
 

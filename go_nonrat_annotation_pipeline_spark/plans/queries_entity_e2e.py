@@ -1,6 +1,5 @@
-"""Entity-resolution E2E: normalize → exact-collapse → q-gram blocking
-→ edit-distance verify → connected components → canonical entity.
-Round-7 trailing module, registered AFTER WINDOW_R7.
+"""Entity-resolution E2E: normalize → exact-collapse → q-gram blocking →
+edit-distance verify → connected components → canonical entity.
 
 The textbook record-linkage funnel composed from already-attested
 pieces: mentions (part rows keyed by name) collapse to distinct keys,

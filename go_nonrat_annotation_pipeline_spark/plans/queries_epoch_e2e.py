@@ -1,6 +1,4 @@
-"""Pack ↔ epoch-shuffle composition E2E — round-10 trailing module,
-registered AFTER WINDOW_R10; leads the round-11 rotation (VERDICT r9
-#6).
+"""Pack ↔ epoch-shuffle composition E2E.
 
 `q_pack_doc_spans` and the epoch-shuffle family are attested
 separately; this query runs the COMPOSITION a multi-epoch dataloader

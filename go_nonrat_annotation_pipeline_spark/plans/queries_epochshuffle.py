@@ -1,5 +1,4 @@
-"""Epoch-shuffle layout queries (operators/epochshuffle.py) — round-9
-trailing module, registered AFTER WINDOW_R9; round-10 rotation fill."""
+"""Epoch-shuffle layout queries (operators/epochshuffle.py)."""
 
 from __future__ import annotations
 

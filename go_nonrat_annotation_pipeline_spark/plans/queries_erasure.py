@@ -1,5 +1,4 @@
-"""Key-erasure (right-to-be-forgotten) planning — round-7 trailing
-module, registered AFTER WINDOW_R7.
+"""Key-erasure (right-to-be-forgotten) planning.
 
 The compliance day-2 op: given an erasure key list, report exactly
 which partitions must be rewritten and how much survives — the plan a

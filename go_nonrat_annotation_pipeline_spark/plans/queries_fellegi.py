@@ -1,6 +1,4 @@
-"""Fellegi–Sunter record-linkage scoring queries (operators/fellegi.py)
-— round-10 trailing module, registered AFTER WINDOW_R10; leads the
-round-11 rotation.
+"""Fellegi–Sunter record-linkage scoring queries (operators/fellegi.py).
 
 The probabilistic half of the entity-resolution suite: the attested ER
 funnel (queries_entity_e2e) links by a HARD edit-distance gate; FS

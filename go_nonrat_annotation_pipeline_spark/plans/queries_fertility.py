@@ -1,5 +1,4 @@
-"""Tokenizer-fertility evaluation — round-9 trailing module,
-registered AFTER WINDOW_R9.
+"""Tokenizer-fertility evaluation.
 
 Fertility (characters per token under a trained tokenizer, per corpus
 slice) is the standard tokenizer-fit metric (BLOOM, Scao et al. 2022

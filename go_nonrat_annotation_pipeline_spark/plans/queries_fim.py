@@ -1,5 +1,4 @@
-"""FIM span-transform queries (operators/fim.py) — round-9 trailing
-module, registered AFTER WINDOW_R9; round-10 rotation fill."""
+"""FIM span-transform queries (operators/fim.py)."""
 
 from __future__ import annotations
 

@@ -1,7 +1,5 @@
-"""CSV sink → source round-trip — registered AFTER the round-6 window
-(plans/registry.py); verified by tools/compare.py locally this round,
-leads the round-7 rotation. Completes the interchange-format set next
-to parquet (native), JSONL (q_jsonl_roundtrip) and ORC
+"""CSV sink → source round-trip. Completes the interchange-format set
+next to parquet (native), JSONL (q_jsonl_roundtrip) and ORC
 (q_orc_roundtrip): header on, explicit quoting, explicit-schema
 read-back (no inference scan), partition-parallel on both sides."""
 

@@ -1,5 +1,4 @@
-"""Graph analytics queries over the part co-occurrence graph — round-4
-additions, registered INSIDE the driver's correctness window.
+"""Graph analytics queries over the part co-occurrence graph.
 
 The graph: parts are connected when some order contains both
 (co-purchase graph — ~2k nodes / ~50k edges at sf0.01). All outputs are

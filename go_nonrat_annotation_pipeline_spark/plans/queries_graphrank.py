@@ -1,10 +1,5 @@
-"""Fixed-point PageRank query (operators/graphrank.py) — registered
-AFTER the round-6 window (plans/registry.py); verified by
-tools/compare.py locally this round, candidate for the round-7
-rotation.
-
-Reuses the co-purchase graph of plans/queries_graph.py (import only —
-that module backs window rows and stays byte-identical)."""
+"""Fixed-point PageRank query (operators/graphrank.py) over the
+co-purchase graph of plans/queries_graph.py."""
 
 from __future__ import annotations
 

@@ -1,7 +1,4 @@
-"""Hamming-radius near-dup queries (operators/hamming.py) — registered
-AFTER the round-6 window (plans/registry.py); verified by
-tools/compare.py locally this round, candidates for the round-7
-rotation.
+"""Hamming-radius near-dup queries (operators/hamming.py).
 
 Three views of the same guaranteed-recall compound-key banding
 (Manku et al. WWW'07): text near-dup over a 60-bit SimHash, multimodal

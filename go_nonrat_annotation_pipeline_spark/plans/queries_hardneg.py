@@ -1,5 +1,4 @@
-"""Hard-negative mining over `embeddings` — round-13 module,
-registered AFTER WINDOW_R13 (leads round 14).
+"""Hard-negative mining over `embeddings`.
 
 The contrastive-training-data op: for every anchor vector, the top-k
 most-similar vectors with a DIFFERENT label — the "hard negatives"

@@ -1,5 +1,4 @@
-"""Hilbert-curve layout queries (operators/hilbert.py) — round-7
-trailing module, registered AFTER WINDOW_R7.
+"""Hilbert-curve layout queries (operators/hilbert.py).
 
 ``q_hilbert_layout`` is the Hilbert twin of q_zorder_layout (per-bucket
 min/max envelopes on both dimensions); ``q_hilbert_locality`` is the

@@ -1,7 +1,4 @@
-"""3-D Hilbert layout queries (operators/hilbert_nd.py) — round-8
-trailing module, registered AFTER WINDOW_R8 (the 2-D module
-queries_hilbert.py backs window rows and is frozen; VERDICT r7 #6
-asked for the N-dimensional generalization + write path).
+"""3-D Hilbert layout queries (operators/hilbert_nd.py).
 
 ``q_hilbert3_layout`` extends the per-bucket envelope audit to three
 filter dimensions; ``q_hilbert3_locality`` measures the 3-D grid walk

@@ -1,5 +1,4 @@
-"""HLL set-intersection estimation via inclusion-exclusion —
-round-13 module, registered AFTER WINDOW_R13 (leads round 14).
+"""HLL set-intersection estimation via inclusion-exclusion.
 
 The sketch family estimates cardinality (KMV, HLL) and set overlap by
 bottom-k coincidence (q_kmv_jaccard); this adds the OTHER standard

@@ -1,7 +1,4 @@
-"""Incremental aggregate maintenance query (operators/incragg.py) —
-registered AFTER the round-6 window (plans/registry.py); verified by
-tools/compare.py locally this round, candidate for the round-7
-rotation.
+"""Incremental aggregate maintenance query (operators/incragg.py).
 
 The oracle is deliberately NOT a mirror of the computation: the Spark
 side MAINTAINS the stored aggregate through a CDC batch (state ∪ signed
@@ -9,9 +6,7 @@ deltas, never reading the new snapshot), while the DuckDB side
 RECOMPUTES the aggregate directly over the new snapshot — a hash match
 proves the self-maintenance identity, not just engine agreement.
 
-Snapshots derive from `orders` with the queries_diff recipe (kept local
-— that module's rows are driver-attested and stay byte-identical),
-extended so the CDC batch exercises every delta path: deletions
+Snapshots derive from `orders` with the queries_diff recipe, extended so the CDC batch exercises every delta path: deletions
 (%7/%5 membership), group-key moves (status flip at %11) and measure
 edits (+5 at %13).
 """

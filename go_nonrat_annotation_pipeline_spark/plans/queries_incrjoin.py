@@ -1,5 +1,4 @@
-"""Incremental join-view maintenance queries (operators/incrjoin.py) —
-round-7 trailing module, registered AFTER WINDOW_R7.
+"""Incremental join-view maintenance queries (operators/incrjoin.py).
 
 The maintained ≡ recompute contract for JOIN views: orders and lineitem
 are each split into a base ("yesterday") and an insert-only delta

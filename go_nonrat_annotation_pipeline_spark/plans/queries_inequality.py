@@ -1,6 +1,5 @@
 """Distributional inequality statistics: Gini coefficient + Shannon
-entropy — round-13 module, registered AFTER WINDOW_R13 (leads round
-14).
+entropy.
 
 - ``q_gini_spend``: Gini coefficient of per-user total spend — THE
   concentration statistic for "is our corpus/revenue dominated by a

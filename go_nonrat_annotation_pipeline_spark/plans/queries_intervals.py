@@ -1,7 +1,4 @@
-"""Interval-overlap join query (operators/intervals.py) — registered
-AFTER the round-6 window (plans/registry.py); verified by
-tools/compare.py locally this round, candidate for the round-7
-rotation.
+"""Interval-overlap join query (operators/intervals.py).
 
 Two interval tables derive from `events` (purchase activity windows ×
 error incident windows, durations keyed off event_id so everything is

@@ -1,7 +1,4 @@
-"""Join-view maintenance with DELETES — round-8 trailing module,
-registered AFTER WINDOW_R8 (operators/incrjoin.py and the insert-only
-streaming twin back frozen window rows; the retraction path lives in
-new modules per the freeze rule).
+"""Join-view maintenance with DELETES.
 
 Both queries maintain V = L ⋈ R through a CDC feed that mixes inserts
 and deletes, then net-fold and aggregate; the oracle recomputes the
@@ -37,6 +34,7 @@ from ..operators.incrjoin_retract import (
 )
 from ..sources.testdata import load_table
 from .registry import register
+from .staging import stage_batch
 
 _N_BATCHES = 3
 
@@ -187,21 +185,15 @@ def stream_join_view_retract(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="stream_ivm_retract_")
     try:
         staged = os.path.join(root, "feed")
-        os.makedirs(staged)
-        base = 1_600_000_000
         for i in range(_N_BATCHES):
-            tmp = os.path.join(root, f"tmp_{i}")
-            feed.where(
-                f"pmod(hash(side, op, k, coalesce(qty, -1)), {_N_BATCHES})"
-                f" = {i}"
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
+            stage_batch(
+                feed.where(
+                    f"pmod(hash(side, op, k, coalesce(qty, -1)), {_N_BATCHES})"
+                    f" = {i}"
+                ),
+                staged,
+                i,
             )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
         stream = (
             spark.readStream.schema(
                 "side string, op string, k long, attr string, qty long"

@@ -1,5 +1,4 @@
-"""Join-strategy queries (binned range join, bloom-prefiltered join) —
-round-4 additions, registered INSIDE the driver's correctness window.
+"""Join-strategy queries (binned range join, bloom-prefiltered join).
 
 Both oracles are the NAIVE formulation (a raw inequality join / a plain
 equi-join): the operators must be plan-level rewrites with bit-identical

@@ -1,5 +1,4 @@
-"""Join-cardinality estimation from CMS sketches — round-7 trailing
-module, registered AFTER WINDOW_R7.
+"""Join-cardinality estimation from CMS sketches.
 
 The optimizer-style sketch application: |A ⋈ B| on an equi-key equals
 the inner product of the two sides' key-frequency vectors, and the

@@ -1,5 +1,4 @@
-"""k-core degree-peeling over the co-purchase graph — round-13
-module, registered AFTER WINDOW_R13 (leads round 14).
+"""k-core degree-peeling over the co-purchase graph.
 
 Extends the graph family (degree histogram / triangles / two-hop /
 PageRank / link prediction) with the dense-backbone extraction:

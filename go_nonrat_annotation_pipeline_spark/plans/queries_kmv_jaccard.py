@@ -1,5 +1,4 @@
-"""KMV set-overlap estimation (bottom-k Jaccard) — round-12 module,
-registered AFTER WINDOW_R12 (leads round 13).
+"""KMV set-overlap estimation (bottom-k Jaccard).
 
 The sketch family so far estimates cardinality (KMV, HLL) and point
 frequency (CMS); this adds the SET-OVERLAP estimator those sketches

@@ -1,5 +1,4 @@
-"""Exact top-k cosine join via lossless cell bounds — round-12
-module, registered AFTER WINDOW_R12 (leads round 13).
+"""Exact top-k cosine join via lossless cell bounds.
 
 The similarity family's exact members so far answer threshold
 questions (exact pairs, exact decontam gate); retrieval wants TOP-K —

@@ -1,5 +1,4 @@
-"""Bucketed k-NN self-join over `embeddings` — round-7 trailing
-module, registered AFTER WINDOW_R7.
+"""Bucketed k-NN self-join over `embeddings`.
 
 The all-vectors variant of the query-set ANN rows (sim_*): EVERY vector
 gets its top-3 neighbors, with candidates restricted to its LSH

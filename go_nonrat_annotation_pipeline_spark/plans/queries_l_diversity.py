@@ -1,5 +1,4 @@
-"""l-diversity audit — round-13 module, registered AFTER WINDOW_R13
-(leads round 14).
+"""l-diversity audit.
 
 Completes the privacy family next to q_k_anonymity: k-anonymity bounds
 GROUP SIZE, but a group of 100 rows all sharing one sensitive value

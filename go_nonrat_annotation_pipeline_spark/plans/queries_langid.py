@@ -1,6 +1,4 @@
-"""Trained language-ID query (operators/langid.py) — registered AFTER
-the round-4 correctness window (plans/registry.py); verified by
-tools/compare.py locally this round, leads the round-5 rotation.
+"""Trained language-ID query (operators/langid.py).
 
 The synthetic tables' lang labels are independent of the text (shared
 vocabulary), so classification ACCURACY is asserted in unit tests on a

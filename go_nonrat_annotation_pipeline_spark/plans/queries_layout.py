@@ -1,5 +1,4 @@
-"""Data-layout queries (Z-order keys, compaction planning) — round-4
-additions, registered INSIDE the driver's correctness window.
+"""Data-layout queries (Z-order keys, compaction planning).
 
 ``q_zorder_layout`` summarizes what a Z-ordered rewrite would achieve:
 rows bucketed by the high byte of their morton key, with per-bucket

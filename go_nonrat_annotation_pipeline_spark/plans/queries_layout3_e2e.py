@@ -1,7 +1,4 @@
-"""3-D Hilbert layout E2E (VERDICT r8 next-round #5) — round-9
-trailing module, registered AFTER WINDOW_R9 (queries_hilbert3.py backs
-two window rows and is frozen; new queries go in a new trailing module
-per the registry rule).
+"""3-D Hilbert layout E2E (VERDICT r8 next-round #5).
 
 ``corpus_layout3_e2e`` composes the whole write→read→skip story as ONE
 oracle-checked DAG: derive three bounded filter dimensions from

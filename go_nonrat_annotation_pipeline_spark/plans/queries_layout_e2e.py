@@ -1,7 +1,6 @@
 """Training-run layout E2E: calibrated quality selection → temperature
 mixture → concat-and-chunk packing, as ONE query with a chained-CTE
-oracle — registered AFTER the round-6 window; round-7 rotation
-candidate.
+oracle.
 
 The last mile every pre-training run walks after curation: each
 source's own top half by calibrated quality (operators/calibrate), a

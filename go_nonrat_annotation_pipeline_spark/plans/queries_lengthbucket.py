@@ -1,5 +1,4 @@
-"""Length-bucketed batching queries — round-7 trailing module,
-registered AFTER WINDOW_R7.
+"""Length-bucketed batching queries.
 
 Dynamic batching by length: grouping similar-length documents into the
 same batch shrinks padding waste (every row pads to its BUCKET's max

@@ -1,6 +1,5 @@
 """Probabilistic-linkage E2E: Fellegi–Sunter verdicts → connected
-components → golden record. Round-10 trailing module, registered AFTER
-WINDOW_R10; leads round 11.
+components → golden record.
 
 The full master-data funnel, composed entirely from attested stages:
 q-gram-blocked candidate pairs are FS-scored (queries_fellegi), pairs

@@ -1,5 +1,4 @@
-"""Jaccard link prediction over the co-occurrence graph — round-13
-module, registered AFTER WINDOW_R13 (leads round 14).
+"""Jaccard link prediction over the co-occurrence graph.
 
 The graph family counts structure (triangles, degrees, two-hop reach,
 PageRank); this PREDICTS it: for vertex pairs NOT currently connected,

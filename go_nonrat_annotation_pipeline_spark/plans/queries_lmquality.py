@@ -1,7 +1,4 @@
-"""LM-quality / corpus-monitoring queries (operators/lmquality.py) —
-registered AFTER the round-6 window (plans/registry.py); verified by
-tools/compare.py locally this round, candidates for the round-7
-rotation.
+"""LM-quality / corpus-monitoring queries (operators/lmquality.py).
 
 Oracles share the Spark side's exactness discipline: the per-bigram
 log term is a single LN over a ratio of exact integers (bit-identical

@@ -1,5 +1,4 @@
-"""Lorenz-curve deciles (cumulative gains) — round-13 module,
-registered AFTER WINDOW_R13 (leads round 14).
+"""Lorenz-curve deciles (cumulative gains).
 
 The curve behind q_gini_spend's scalar: users ranked by total spend,
 split into ten rank deciles, each reporting its share and the

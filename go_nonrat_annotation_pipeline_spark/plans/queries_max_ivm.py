@@ -1,5 +1,4 @@
-"""MAX-maintenance query (operators/incragg_minmax.py MAX twin) —
-round-10 trailing module, registered AFTER WINDOW_R10; leads round 11.
+"""MAX-maintenance query (operators/incragg_minmax.py MAX twin).
 
 Completes the Gupta-Mumick non-self-maintainable pair: MAX under
 deletes via the SAME k-buffer machinery run over negated values (the

@@ -1,5 +1,4 @@
-"""MIN-maintenance queries (operators/incragg_minmax.py) — round-9
-trailing module, registered AFTER WINDOW_R9; round-10/11 rotation fill.
+"""MIN-maintenance queries (operators/incragg_minmax.py).
 
 The CDC batch is derived deterministically from lineitem: deletes are
 EVERY row with quantity ≤ 5 (a targeted attack on the buffers — the

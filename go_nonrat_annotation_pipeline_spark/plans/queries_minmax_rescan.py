@@ -1,8 +1,7 @@
-"""MIN/MAX IVM selective-rescan E2E (operators/incragg_rescan.py) —
-round-11 trailing module, registered AFTER WINDOW_R11.
+"""MIN/MAX IVM selective-rescan E2E (operators/incragg_rescan.py).
 
 Closes the loop VERDICT r10 flagged: the k-buffer maintenance
-(operators/incragg_minmax.py, frozen this round) marks exhausted groups
+(operators/incragg_minmax.py) marks exhausted groups
 ``needs_rescan`` but nothing rebuilt them; minbuf_rescan/maxbuf_rescan
 now rebuild ONLY the flagged groups from the post-CDC snapshot and the
 result keeps maintaining. The E2E drives BOTH machines through

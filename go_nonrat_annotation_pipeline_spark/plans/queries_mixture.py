@@ -1,5 +1,4 @@
-"""Temperature-mixture sampling queries (operators/mixture.py) —
-registered AFTER the round-6 window; round-7 rotation candidates.
+"""Temperature-mixture sampling queries (operators/mixture.py).
 
 τ=2 temperature data mixing with data-derived per-source rates (vs the
 hard-coded policy rates of q_mixture_weighted). All fixed-point BIGINT:

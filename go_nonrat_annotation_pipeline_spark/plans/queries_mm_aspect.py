@@ -1,5 +1,4 @@
-"""Multimodal aspect-ratio bucketing — round-7 trailing module,
-registered AFTER WINDOW_R7.
+"""Multimodal aspect-ratio bucketing.
 
 The image-side analogue of length-bucketed batching: diffusion/vision
 training groups images by aspect-ratio bucket so each batch crops or

@@ -1,5 +1,4 @@
-"""Maximal Marginal Relevance diversification — round-12 module,
-registered AFTER WINDOW_R12 (leads round 13).
+"""Maximal Marginal Relevance diversification.
 
 Retrieval returns the k most RELEVANT items; dedup removes the
 near-identical; MMR (Carbonell & Goldstein 1998) is the op between

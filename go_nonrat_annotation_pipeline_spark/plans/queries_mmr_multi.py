@@ -1,5 +1,4 @@
-"""Batched multi-query MMR re-ranking — round-13 module, registered
-AFTER WINDOW_R13 (leads round 14).
+"""Batched multi-query MMR re-ranking.
 
 `q_mmr_rerank` diversifies ONE retrieval; production MMR re-ranks MANY
 retrievals per batch (one per eval prompt / user query). The batched

@@ -1,5 +1,4 @@
-"""Monitoring statistics: CUSUM changepoint + two-sample KS test —
-round-13 module, registered AFTER WINDOW_R13 (leads round 14).
+"""Monitoring statistics: CUSUM changepoint + two-sample KS test.
 
 Completes the drift/shift toolkit (KL, PSI) with the two classical
 tests, both made EXACT by clearing denominators into integers:

@@ -1,6 +1,5 @@
 """Exact embedding near-dup E2E: lossless pair join -> components ->
-canonical survivor — round-12 module, registered AFTER WINDOW_R12
-(leads round 13).
+canonical survivor.
 
 Composes the round's exact family at pipeline altitude: the
 candidate-aware drained EXACT pair join (zero false negatives by the

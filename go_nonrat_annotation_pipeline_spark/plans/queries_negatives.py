@@ -1,5 +1,4 @@
-"""Deterministic negative sampling for contrastive training — round-7
-trailing module, registered AFTER WINDOW_R7.
+"""Deterministic negative sampling for contrastive training.
 
 Retrieval/embedding training needs, for every anchor document, k
 "random" negatives that are (a) replayable across runs, (b) never the

@@ -1,5 +1,4 @@
-"""Round-7 E2E composite: dedup-aware selection → whole-doc FFD
-packing. Trailing module, registered AFTER WINDOW_R7.
+"""E2E composite: dedup-aware selection → whole-doc FFD packing.
 
 The layout tail of a curation run, chained: LSH near-dup clusters set
 per-doc keep rates (1/cluster_size md5 gate), the surviving corpus is

@@ -1,5 +1,4 @@
-"""Token-exact concat-and-chunk packing queries (operators/packing.py)
-— registered AFTER the round-6 window; round-7 rotation candidates.
+"""Token-exact concat-and-chunk packing queries (operators/packing.py).
 
 The layout audit every pre-training dataloader needs: deterministic
 shard order, exact per-document sequence spans, and the per-sequence

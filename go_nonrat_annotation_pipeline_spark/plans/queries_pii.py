@@ -1,6 +1,4 @@
-"""PII scrub queries (operators/pii.py) — registered AFTER the round-4
-correctness window (plans/registry.py); verified by tools/compare.py
-locally, they join the round-5 rotation as never-attested rows.
+"""PII scrub queries (operators/pii.py).
 
 The synthetic `documents.text` is a clean word stream, so both engines
 first LACE deterministic PII into it (same expression on both sides:

@@ -1,5 +1,4 @@
-"""PIVOT / UNPIVOT — round-10 trailing module, registered AFTER
-WINDOW_R10; leads round 11.
+"""PIVOT / UNPIVOT.
 
 The report-shaping pair every warehouse user expects. PIVOT with an
 EXPLICIT value list (the only scale-sane form — implicit pivot scans

@@ -1,6 +1,6 @@
-"""Dynamic PIVOT (unknown value domain) — round-11 module, registered
-AFTER WINDOW_R11 (leads round 12). Completes the PIVOT family beyond
-``queries_pivot.py``'s declared-values form (VERDICT r10 Next #5).
+"""Dynamic PIVOT (unknown value domain). Completes the PIVOT family
+beyond ``queries_pivot.py``'s declared-values form (VERDICT r10 Next
+#5).
 
 The production two-pass shape for a pivot column whose domain is NOT
 known at plan time: (1) a distinct-scan of the pivot column, collected

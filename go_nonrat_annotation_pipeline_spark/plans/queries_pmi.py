@@ -1,5 +1,4 @@
-"""PMI collocation queries (operators/collocations.py) — round-9
-trailing module, registered AFTER WINDOW_R9; round-10 rotation fill."""
+"""PMI collocation queries (operators/collocations.py)."""
 
 from __future__ import annotations
 

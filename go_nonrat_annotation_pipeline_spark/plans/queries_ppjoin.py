@@ -1,6 +1,5 @@
 """Prefix-filtered exact set-similarity join queries
-(operators/ppjoin.py) — registered AFTER the round-6 window; round-7
-rotation candidates.
+(operators/ppjoin.py).
 
 The exact full-corpus Jaccard-threshold join over 3-shingle sets (zero
 false negatives, no caller bucketing), plus the pruning audit that

@@ -1,6 +1,4 @@
-"""Priority-sampling queries (operators/sampling_priority.py) —
-round-9 trailing module, registered AFTER WINDOW_R9; round-10 rotation
-fill."""
+"""Priority-sampling queries (operators/sampling_priority.py)."""
 
 from __future__ import annotations
 

@@ -1,5 +1,4 @@
-"""Mann-Whitney U test + t-closeness audit — round-13 module,
-registered AFTER WINDOW_R13 (leads round 14).
+"""Mann-Whitney U test + t-closeness audit.
 
 - ``q_mannwhitney_u``: the nonparametric two-sample location test the
   drift family (KL/PSI/KS) and the parametric moments lack — rank-sum

@@ -1,5 +1,4 @@
-"""Population stability index between two sources — round-13 module,
-registered AFTER WINDOW_R13 (leads round 14).
+"""Population stability index between two sources.
 
 Distribution-drift monitor next to q_mixture_drift_kl: PSI =
 Σ (p_i − q_i)·ln(p_i/q_i) over the binned length distributions of two

@@ -1,5 +1,4 @@
-"""Corpus-quality queries (Gopher-rule flags, repetition signals) —
-round-4 additions, registered INSIDE the driver's correctness window.
+"""Corpus-quality queries (Gopher-rule flags, repetition signals).
 
 Everything is integer/boolean at the hash boundary (scaled-integer
 ratios via FLOOR of a single deterministic per-row double division —

@@ -1,8 +1,4 @@
-"""Corpus-frequency quality query (operators/retrieval.rare_token_stats)
-— registered AFTER the round-4 correctness window (plans/registry.py);
-verified by tools/compare.py locally this round, leads the round-5
-rotation. Separate module because queries_quality sits INSIDE the
-window (slots 23-24): appending there would shift every later slot."""
+"""Corpus-frequency quality query (operators/retrieval.rare_token_stats)."""
 
 from __future__ import annotations
 

@@ -1,5 +1,4 @@
-"""Exact interpolated quantiles in integer fixed-point — round-10
-trailing module, registered AFTER WINDOW_R10; leads round 11.
+"""Exact interpolated quantiles in integer fixed-point.
 
 `percentile_cont` semantics (SQL:2003 linear interpolation) without
 engine-native percentile functions or float arithmetic: for quantile

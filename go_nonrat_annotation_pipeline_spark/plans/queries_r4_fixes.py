@@ -1,6 +1,5 @@
-"""Round-4 repairs of the four never-driver-green queries (VERDICT.md
-round 3, "What's wrong" 1-4). Registered FIRST so they lead the driver's
-50-entry correctness window.
+"""Repairs of four queries whose results failed the hash comparison
+(VERDICT.md round 3, "What's wrong" 1-4).
 
 All four passed the local exact-value oracle in round 3 — the failures
 were at the driver's canonicalization/hash boundary (raw array, raw

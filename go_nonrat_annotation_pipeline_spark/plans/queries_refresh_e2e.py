@@ -9,9 +9,6 @@ lifted to corpus curation: `snapshot_diff` is the generic upsert
 decision, `incremental_minhash_dups` is the post-backfill dedup gate
 whose per-batch cost is independent of |store|².
 
-Registered AFTER the round-4 correctness window (plans/registry.py);
-tools/compare.py-verified locally, joins the round-5 rotation.
-
 Snapshots derive deterministically from the driver's documents table
 (no synthesized data): the new crawl drops doc_id%11==3, revises
 doc_id%13==4 (text || ' revised'), and first sees doc_id%10==7 (absent

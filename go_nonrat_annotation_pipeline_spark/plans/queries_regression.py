@@ -1,5 +1,4 @@
-"""Group-wise OLS regression + daily lag-1 autocorrelation —
-round-13 module, registered AFTER WINDOW_R13 (leads round 14).
+"""Group-wise OLS regression + daily lag-1 autocorrelation.
 
 Extends the association family (Pearson/Spearman/MI/chi-square) from
 "are these related" to the two fit/forecast primitives a feature-triage

@@ -1,5 +1,4 @@
-"""Data-constrained epoch/repeat budgeting — round-10 trailing module,
-registered AFTER WINDOW_R10; leads round 11.
+"""Data-constrained epoch/repeat budgeting.
 
 The inverse regime of the water-filling budget (queries_budget.py,
 budget BELOW the unique-token total): a data-CONSTRAINED run has a

@@ -1,9 +1,5 @@
 """Retrieval queries (TF-IDF / BM25 single- and multi-query / q-gram
-fuzzy join) — registered INSIDE the driver's 50-entry correctness window
-(round 4 slots 5-8; see plans/registry.py): the underlying operator
-module changed this round (tfidf broadcast-hint removal, BM25 scalar
-fold + guards, new multi-query BM25), so every row here re-enters the
-window for fresh attestation.
+fuzzy join).
 """
 
 from __future__ import annotations

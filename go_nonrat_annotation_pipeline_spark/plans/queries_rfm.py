@@ -1,5 +1,4 @@
-"""RFM (recency / frequency / monetary) scoring over `events` —
-round-7 trailing module, registered AFTER WINDOW_R7.
+"""RFM (recency / frequency / monetary) scoring over `events`.
 
 The classic engagement segmentation, built with the repo's exact
 equi-depth machinery (the q_length_bucketing_sketch rule): per-user

@@ -1,5 +1,4 @@
-"""Robust per-group statistics: MAD outliers + trimmed mean —
-round-13 module, registered AFTER WINDOW_R13 (leads round 14).
+"""Robust per-group statistics: MAD outliers + trimmed mean.
 
 q_value_outliers flags by mean/stddev — which an outlier itself
 corrupts; these are the classical robust twins:

@@ -1,6 +1,5 @@
 """Signed random-projection (JL) queries over `embeddings`
-(operators/rproj.py) — round-7 trailing module, registered AFTER
-WINDOW_R7; round-8 rotation candidates.
+(operators/rproj.py).
 
 Everything at the comparison boundary is exact BIGINT: embeddings are
 fixed-point quantized (floor(x·10⁶)), projection signs are md5-derived

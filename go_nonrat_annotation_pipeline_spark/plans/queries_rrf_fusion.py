@@ -1,5 +1,4 @@
-"""Reciprocal-rank fusion of lexical and semantic retrievers —
-round-12 module, registered AFTER WINDOW_R12 (leads round 13).
+"""Reciprocal-rank fusion of lexical and semantic retrievers.
 
 The retrieval family has both retriever legs (BM25 lexical search,
 exact cosine top-k) but nothing that COMBINES them — and hybrid

@@ -1,5 +1,4 @@
-"""Batched multi-query hybrid RRF fusion — round-13 module, registered
-AFTER WINDOW_R13 (leads round 14).
+"""Batched multi-query hybrid RRF fusion.
 
 `q_rrf_fusion` fuses ONE hybrid query; a production retrieval batch
 fuses many (one per eval prompt). This is the batched twin, and —

@@ -1,8 +1,4 @@
-"""Weighted (PPS systematic) sampling query — registered AFTER the
-round-4 correctness window (plans/registry.py); verified by
-tools/compare.py locally this round, leads the round-5 rotation.
-Separate module so queries_sampling.py stays byte-identical to its
-round-3 attestation."""
+"""Weighted (PPS systematic) sampling query."""
 
 from __future__ import annotations
 

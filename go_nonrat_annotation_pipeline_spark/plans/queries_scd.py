@@ -1,5 +1,4 @@
-"""SCD Type 2 dimension-build queries (operators/scd.py) — registered
-AFTER the round-6 window; round-7 rotation candidates.
+"""SCD Type 2 dimension-build queries (operators/scd.py).
 
 Tracked attribute = event_type per user_id over the events log; the
 history is every consecutive run of one type, the current view its open

@@ -1,5 +1,4 @@
-"""Semantic (embedding-space) benchmark decontamination — round-10
-trailing module, registered AFTER WINDOW_R10; leads round 11.
+"""Semantic (embedding-space) benchmark decontamination.
 
 The n-gram gate (plans/queries_decontam.py) catches verbatim and
 near-verbatim eval leakage; paraphrased leakage needs the embedding

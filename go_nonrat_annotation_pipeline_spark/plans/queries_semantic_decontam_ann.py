@@ -1,5 +1,4 @@
-"""ANN-accelerated semantic decontamination — round-11 module,
-registered AFTER WINDOW_R11 (leads round 12).
+"""ANN-accelerated semantic decontamination.
 
 Twin of ``q_semantic_decontam`` (brute-force N x B gate) with the
 per-doc constant cut from B cosines to (k centroid dots + candidates

@@ -1,9 +1,7 @@
-"""Arrow-kernel twin of the exact-ANN decontamination gate — round-12
-module, registered AFTER WINDOW_R12 (leads round 13).
+"""Arrow-kernel twin of the exact-ANN decontamination gate.
 
-Same lossless ball-pruned plan as ``q_semantic_decontam_ann`` (frozen
-WINDOW_R12 row) with the probe's k interpreted higher-order dots per
-row swapped for ONE Arrow numpy matmul per batch
+Same lossless ball-pruned plan as ``q_semantic_decontam_ann`` with the
+probe's k interpreted higher-order dots per row swapped for ONE Arrow numpy matmul per batch
 (``probe_cells(..., kernel=True)`` — the scale setting for k ≳ 16,
 the ``sim_ivf_trained_kernel`` twin discipline). Exactness is
 kernel-independent: the probe's absolute slack dwarfs any float
@@ -11,9 +9,8 @@ reassociation delta between numpy and the JVM fold, so the kernel's
 probed set remains a superset of every within-threshold pair and the
 downstream re-rank computes the oracle-exact expression cosine either
 way — the oracle is the same brute-force SQL. The body mirrors the
-frozen twin line-for-line (it cannot be parameterized without editing
-a window-backing module mid-round); behavioral deltas are exactly the
-``kernel=True`` flag.
+twin line-for-line; behavioral deltas are exactly the ``kernel=True``
+flag.
 """
 
 from __future__ import annotations

@@ -1,7 +1,4 @@
-"""Semantic-dedup queries (operators/semdedup.py) — registered AFTER
-the round-4 correctness window (plans/registry.py; window = first 50
-entries); verified by tools/compare.py locally, they join the round-5
-rotation as never-attested rows.
+"""Semantic-dedup queries (operators/semdedup.py).
 
 Oracle: one full-vector kmeans CTE chain (shared_sql.train_ctes — the
 same deterministic Lloyd's mirror the PQ family unrolls per subspace),

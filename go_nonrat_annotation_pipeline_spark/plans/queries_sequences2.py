@@ -1,5 +1,4 @@
-"""Event-sequence trigrams + Haar wavelet decomposition — round-13
-module, registered AFTER WINDOW_R13 (leads round 14).
+"""Event-sequence trigrams + Haar wavelet decomposition.
 
 - ``q_event_trigrams``: third-order sequential patterns — the step
   between the transition matrix (``q_event_transitions``, pairs) and

@@ -1,5 +1,4 @@
-"""Bounce-rate report over gap sessions — round-13 module, registered
-AFTER WINDOW_R13 (leads round 14).
+"""Bounce-rate report over gap sessions.
 
 The engagement metric the sessionizers (w2 / w3) stop short of:
 how many gap-sessions contain exactly ONE event. Same construction as

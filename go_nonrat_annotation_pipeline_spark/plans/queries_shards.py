@@ -1,6 +1,4 @@
-"""Training-shard shuffle query (operators/shards.py) — registered
-AFTER the round-6 window (plans/registry.py); verified by
-tools/compare.py locally this round, leads the round-7 rotation."""
+"""Training-shard shuffle query (operators/shards.py)."""
 
 from __future__ import annotations
 

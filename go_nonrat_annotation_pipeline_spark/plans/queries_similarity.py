@@ -113,8 +113,7 @@ _KM_ORACLE = (
     "sim_ivf_trained",
     _KM_ORACLE,
     doc="similarity: IVF ANN over k-means-trained cells (full unrolled-"
-    "Lloyd's oracle; registered first in this module so the driver's "
-    "correctness window attests it)",
+    "Lloyd's oracle)",
 )
 def sim_ivf_trained(spark, sf_dir):
     from ..operators.kmeans import kmeans_fit

@@ -1,12 +1,5 @@
 """Baseline/scale-path ANN queries over `embeddings` (brute-force,
 single-table LSH, sampled-centroid IVF, multi-table LSH).
-
-Split from queries_similarity.py in round 3 to sit after the 50-entry
-correctness window (slot 50 caught `sim_topk_bruteforce`, re-attested
-green r3); rotated INSIDE the round-4 window (slots 21-24) because the
-other three entries' round-2 greens are — after queries_dedup_attested's
-round-1 rows — the oldest in the registry. Query bodies unchanged since
-their attestations. See plans/registry.py for the ordering contract.
 """
 
 from __future__ import annotations

@@ -1,7 +1,4 @@
-"""Product-quantization ANN queries (operators/pq.py) — registered
-AFTER the round-4 correctness window (see plans/registry.py; window =
-first 50 entries). Verified by tools/compare.py locally this round;
-they lead the round-5 rotation as never-attested rows.
+"""Product-quantization ANN queries (operators/pq.py).
 
 Oracles: the full PQ pipeline unrolls in DuckDB — one kmeans CTE chain
 per subvector slice (same Lloyd's mirror as queries_similarity's

@@ -1,7 +1,4 @@
-"""Round-4 sink/sketch additions: ORC round-trip and grouped HLL —
-registered AFTER the round-4 correctness window (plans/registry.py);
-verified by tools/compare.py locally this round, lead the round-5
-rotation."""
+"""ORC round-trip and grouped HLL queries."""
 
 from __future__ import annotations
 

@@ -1,10 +1,8 @@
-"""Sketch queries (deterministic HLL / KMV / count-min) — round-4
-additions, registered INSIDE the driver's correctness window (see
-plans/registry.py). The oracle-checked output is the integer sketch
-STATE (registers / minima / counter minima); float estimates derived
-from that state are asserted against true cardinalities in
-tests/test_sketches.py, never at the hash boundary.
-"""
+"""Sketch queries (deterministic HLL / KMV / count-min). The
+oracle-checked output is the integer sketch STATE (registers / minima /
+counter minima); float estimates derived from that state are asserted
+against true cardinalities in tests/test_sketches.py, never at the hash
+boundary."""
 
 from __future__ import annotations
 

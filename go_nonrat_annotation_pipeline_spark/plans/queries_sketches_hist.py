@@ -1,8 +1,4 @@
-"""Histogram-quantile sketch query (operators/sketches.hist_bins) —
-registered AFTER the round-4 correctness window (plans/registry.py);
-verified by tools/compare.py locally this round, leads the round-5
-rotation. Separate from queries_sketches because that module sits
-INSIDE the window: appending here would shift every later slot."""
+"""Histogram-quantile sketch query (operators/sketches.hist_bins)."""
 
 from __future__ import annotations
 

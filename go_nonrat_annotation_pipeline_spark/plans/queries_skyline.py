@@ -1,5 +1,4 @@
-"""Pareto skyline (maximal-vector / preference query) — round-13
-module, registered AFTER WINDOW_R13 (leads round 14).
+"""Pareto skyline (maximal-vector / preference query).
 
 A new operator class for the engine: given points with d objectives,
 return the set not DOMINATED by any other point (dominates = >= on

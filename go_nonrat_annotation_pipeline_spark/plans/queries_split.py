@@ -1,5 +1,4 @@
-"""Leakage-safe splitting queries (operators/splitting.py) — round-9
-trailing module, registered AFTER WINDOW_R9; round-10 rotation fill.
+"""Leakage-safe splitting queries (operators/splitting.py).
 
 Cluster key for the documents table: the 40-char content prefix (the
 same key family dedup_exact attests) — the synthetic corpus's

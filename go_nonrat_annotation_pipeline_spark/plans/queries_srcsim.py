@@ -1,5 +1,4 @@
-"""Source-level bigram Jaccard similarity — round-13 module,
-registered AFTER WINDOW_R13 (leads round 14).
+"""Source-level bigram Jaccard similarity.
 
 Template / mirror detection at the SOURCE granularity: two corpus
 sources whose bigram SETS overlap heavily are near-mirrors (same

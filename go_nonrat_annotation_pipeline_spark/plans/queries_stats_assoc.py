@@ -1,6 +1,5 @@
 """Association statistics: Pearson correlation matrix + mutual
-information — round-12 module, registered AFTER WINDOW_R12 (leads
-round 13).
+information.
 
 The analytics family covers distributional shape (quantiles,
 histograms, outliers) but nothing RELATING columns — the first thing

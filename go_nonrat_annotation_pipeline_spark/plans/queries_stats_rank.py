@@ -1,6 +1,5 @@
 """Rank and contingency association statistics: Spearman's rho +
-chi-square / Cramer's V — round-13 module, registered AFTER WINDOW_R13
-(leads round 14).
+chi-square / Cramer's V.
 
 Completes the association family started by q_feature_corr (Pearson)
 and q_mutual_information: Spearman catches MONOTONE non-linear

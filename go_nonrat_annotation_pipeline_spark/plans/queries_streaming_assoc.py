@@ -1,5 +1,4 @@
-"""Streaming association-rule maintenance — round-13 module,
-registered AFTER WINDOW_R13 (leads round 14).
+"""Streaming association-rule maintenance.
 
 The incremental form of q_assoc_rules: baskets arrive WHOLE in
 micro-batches (arrival split by order key, the invariant a real
@@ -25,6 +24,7 @@ from pyspark.sql import functions as F
 from ..sources.testdata import load_table
 from .queries_assoc_rules import _SUP_DEN, _SUP_NUM
 from .registry import register
+from .staging import stage_batch
 
 
 @register(
@@ -148,20 +148,14 @@ def stream_assoc_rules(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="stream_assoc_")
     try:
         staged = os.path.join(root, "li")
-        os.makedirs(staged)
-        base = 1_600_000_000
         for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            li.where(f"l_orderkey % 3 = {i}").select(
-                "l_orderkey", "l_partkey"
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
+            stage_batch(
+                li.where(f"l_orderkey % 3 = {i}").select(
+                    "l_orderkey", "l_partkey"
+                ),
+                staged,
+                i,
             )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
         stream = (
             spark.readStream.schema("l_orderkey long, l_partkey long")
             .option("maxFilesPerTrigger", 1)

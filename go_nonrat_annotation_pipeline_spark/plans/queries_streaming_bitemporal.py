@@ -1,5 +1,4 @@
-"""Streaming bitemporal store query — round-10 trailing module,
-registered AFTER WINDOW_R10; leads round 11.
+"""Streaming bitemporal store query.
 
 The stream twin of q_bitemporal_history: the synthesized assertion
 log (backdated corrections included) arrives in three micro-batches
@@ -21,6 +20,7 @@ from ..streaming.bitemporal_stream import (
 )
 from ..operators import bitemporal as BT
 from .registry import register
+from .staging import stage_batch
 from .queries_bitemporal import _SRC, _asserts
 
 
@@ -46,20 +46,8 @@ def stream_bitemporal_history(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="stream_bitemporal_")
     try:
         staged = os.path.join(root, "a")
-        os.makedirs(staged)
-        base = 1_600_000_000
         for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            asserts.where(f"_tie % 3 = {i}").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
+            stage_batch(asserts.where(f"_tie % 3 = {i}"), staged, i)
         stream = (
             spark.readStream.schema(ASSERT_SCHEMA)
             .option("maxFilesPerTrigger", 1)

@@ -1,5 +1,4 @@
-"""Policy-compacted streaming bitemporal store — round-11 module,
-registered AFTER WINDOW_R11 (leads round 12).
+"""Policy-compacted streaming bitemporal store.
 
 The compaction twin of ``stream_bitemporal_history``: the SAME
 synthesized assertion log drains through the policy-compacting handler
@@ -26,6 +25,7 @@ from ..streaming.bitemporal_compact import (
 )
 from ..streaming.bitemporal_stream import ASSERT_SCHEMA
 from .registry import register
+from .staging import stage_batch
 from .queries_bitemporal import _SRC, _asserts
 
 
@@ -52,20 +52,8 @@ def stream_bitemporal_compacted(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="stream_btcompact_")
     try:
         staged = os.path.join(root, "a")
-        os.makedirs(staged)
-        base = 1_600_000_000
         for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            asserts.where(f"_tie % 3 = {i}").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
+            stage_batch(asserts.where(f"_tie % 3 = {i}"), staged, i)
         stream = (
             spark.readStream.schema(ASSERT_SCHEMA)
             .option("maxFilesPerTrigger", 1)

@@ -1,9 +1,7 @@
-"""As-of read AT/ABOVE the knowledge horizon on a bitemporal store
-that ACTUALLY folded — round-12 module, registered AFTER WINDOW_R12
-(leads round 13). Closes VERDICT r11 Next #6: the refusal path below
-the horizon was pytest-pinned (tests/test_bitemporal_compact.py) but
-no registered query exercised a reconstructible as-of on a folded
-store.
+"""As-of read AT/ABOVE the knowledge horizon on a bitemporal store that
+ACTUALLY folded. Closes VERDICT r11 Next #6: the refusal path below the
+horizon was pytest-pinned (tests/test_bitemporal_compact.py) but no
+registered query exercised a reconstructible as-of on a folded store.
 
 The production rhythm this models: stream assertions, fold during a
 quiet window (stream stopped, checkpoint committed — the epochal
@@ -39,6 +37,7 @@ from ..streaming.bitemporal_compact import (
 )
 from ..streaming.bitemporal_stream import ASSERT_SCHEMA
 from .registry import register
+from .staging import stage_batch
 from .queries_bitemporal import _SRC, _asserts
 
 # recorded-time split instants: 2024-01-11 / 2024-01-21 00:00:00Z
@@ -71,8 +70,6 @@ def stream_btcompact_asof(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="stream_btcasof_")
     try:
         staged = os.path.join(root, "a")
-        os.makedirs(staged)
-        base = 1_600_000_000
         cuts = [
             f"recorded_us < {_T1_US}",
             f"recorded_us >= {_T1_US} AND recorded_us < {_T2_US}",
@@ -80,17 +77,7 @@ def stream_btcompact_asof(spark, sf_dir):
         ]
 
         def stage(i: int) -> None:
-            tmp = os.path.join(root, f"tmp_{i}")
-            asserts.where(cuts[i]).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
+            stage_batch(asserts.where(cuts[i]), staged, i)
 
         store = os.path.join(root, "store")
         ckpt = os.path.join(root, "ckpt")

@@ -1,6 +1,4 @@
-"""Streaming count-min sketch query — registered AFTER the round-4
-correctness window (plans/registry.py); verified by tools/compare.py
-locally this round, leads the round-5 rotation.
+"""Streaming count-min sketch query.
 
 Heavy-hitter counting over a stream with BOUNDED state: depth×width
 integer counters per tumbling window regardless of key cardinality

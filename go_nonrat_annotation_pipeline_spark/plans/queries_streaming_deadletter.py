@@ -1,5 +1,4 @@
-"""Streaming dead-letter quarantine — round-7 trailing module,
-registered AFTER WINDOW_R7.
+"""Streaming dead-letter quarantine.
 
 The stream twin of q_json_quarantine_rows: each micro-batch parse-or-
 null routes its rows, quarantined rows append to a durable side store
@@ -21,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
 from .registry import register
+from .staging import stage_batch
 
 _CORRUPT = "event_id % 7 = 0"
 
@@ -74,20 +74,14 @@ def stream_json_quarantine(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="stream_dlq_")
     try:
         staged = os.path.join(root, "ev")
-        os.makedirs(staged)
-        base = 1_600_000_000
         for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            events.where(f"event_id % 3 = {i}").select(
-                "event_id", "event_type", "props"
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
+            stage_batch(
+                events.where(f"event_id % 3 = {i}").select(
+                    "event_id", "event_type", "props"
+                ),
+                staged,
+                i,
             )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
         stream = (
             spark.readStream.schema(
                 "event_id long, event_type string, props string"

@@ -1,5 +1,4 @@
-"""Streaming decontamination gate — round-9 trailing module,
-registered AFTER WINDOW_R9; round-10 rotation fill.
+"""Streaming decontamination gate.
 
 The stream twin of q_decontam_verdicts: documents arrive in
 micro-batches (the ingest lane of a training-data pipeline); each
@@ -23,6 +22,7 @@ from pyspark.sql import functions as F
 from ..operators import decontam as DC
 from ..sources.testdata import load_table
 from .registry import register
+from .staging import stage_batch
 
 _N = 8
 _BENCH = "doc_id % 29 = 0"
@@ -80,20 +80,14 @@ def stream_decontam_gate(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="stream_decontam_")
     try:
         staged = os.path.join(root, "docs")
-        os.makedirs(staged)
-        base = 1_600_000_000
         for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            docs.where(_CORPUS).where(f"doc_id % 3 = {i}").select(
-                "doc_id", "text"
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
+            stage_batch(
+                docs.where(_CORPUS).where(f"doc_id % 3 = {i}").select(
+                    "doc_id", "text"
+                ),
+                staged,
+                i,
             )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
         stream = (
             spark.readStream.schema("doc_id long, text string")
             .option("maxFilesPerTrigger", 1)

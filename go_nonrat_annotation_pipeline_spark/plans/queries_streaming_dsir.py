@@ -1,6 +1,4 @@
-"""Streaming DSIR scoring — registered AFTER the round-6 window
-(plans/registry.py); verified by tools/compare.py locally this round,
-leads the round-7 rotation.
+"""Streaming DSIR scoring.
 
 The production deployment shape for importance weighting: the bucket
 model is trained OFFLINE on the static corpus (dsir_bucket_weights —
@@ -30,8 +28,7 @@ from .registry import register
 def _read_docs_stream(spark, sf_dir):
     """Streaming scan of the documents parquet (FileStreamSource needs a
     directory; pin the single file with pathGlobFilter — the
-    read_events_stream trick, localized here to keep streaming/stream.py
-    byte-frozen while its queries sit in WINDOW_R6)."""
+    read_events_stream trick)."""
     path = os.path.join(sf_dir, "documents.parquet")
     return (
         spark.readStream.schema(

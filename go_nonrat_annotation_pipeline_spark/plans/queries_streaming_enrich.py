@@ -1,6 +1,4 @@
-"""Stream-static enrichment query — registered AFTER the round-4
-correctness window (plans/registry.py); verified by tools/compare.py
-locally this round, leads the round-5 rotation.
+"""Stream-static enrichment query.
 
 The lookup-join shape every streaming pipeline hits: a keyed event
 stream broadcast-joins a STATIC dimension inside each micro-batch

@@ -1,5 +1,4 @@
-"""Streaming EWMA maintenance — round-13 module, registered AFTER
-WINDOW_R13 (leads round 14).
+"""Streaming EWMA maintenance.
 
 The incremental form of ``q_ewma_daily``: events arrive in
 micro-batches and the sufficient statistic for the smoother — the
@@ -30,6 +29,7 @@ from pyspark.sql import Window, functions as F
 from ..sources.testdata import load_table
 from .queries_timeseries2 import _EW_HI, _EW_LO, _K
 from .registry import register
+from .staging import stage_batch
 
 
 def _ewma_from_counts(spark, cnt):
@@ -100,20 +100,14 @@ def stream_ewma_daily(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="stream_ewma_")
     try:
         staged = os.path.join(root, "ev")
-        os.makedirs(staged)
-        base = 1_600_000_000
         for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            ev.where(f"event_id % 3 = {i}").select(
-                "event_type", "d"
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
+            stage_batch(
+                ev.where(f"event_id % 3 = {i}").select(
+                    "event_type", "d"
+                ),
+                staged,
+                i,
             )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
         stream = (
             spark.readStream.schema("event_type string, d date")
             .option("maxFilesPerTrigger", 1)

@@ -1,5 +1,4 @@
-"""Streaming HLL distinct-count maintenance — round-7 trailing module,
-registered AFTER WINDOW_R7.
+"""Streaming HLL distinct-count maintenance.
 
 The streaming form of q_hll_registers: an event stream folds into the
 64-register HLL state micro-batch by micro-batch (union + register-wise
@@ -18,6 +17,7 @@ from pyspark.sql import functions as F
 from ..operators import sketches as SK
 from ..sources.testdata import load_table
 from .registry import register
+from .staging import stage_batch
 
 _P = 6  # 64 registers
 
@@ -62,20 +62,14 @@ def stream_hll_distinct(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="stream_hll_")
     try:
         staged = os.path.join(root, "ev")
-        os.makedirs(staged)
-        base = 1_600_000_000
         for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            events.where(f"event_id % 3 = {i}").select(
-                "event_id", "user_id"
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
+            stage_batch(
+                events.where(f"event_id % 3 = {i}").select(
+                    "event_id", "user_id"
+                ),
+                staged,
+                i,
             )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
         stream = (
             spark.readStream.schema("event_id long, user_id long")
             .option("maxFilesPerTrigger", 1)

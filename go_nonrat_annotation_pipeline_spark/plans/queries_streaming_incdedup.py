@@ -1,6 +1,4 @@
-"""Streaming incremental-dedup E2E query — registered AFTER the
-round-4 correctness window (plans/registry.py); verified by
-tools/compare.py locally this round, leads the round-5 rotation.
+"""Streaming incremental-dedup E2E query.
 
 The continuous-ingestion flagship: a document stream is near-dup-gated
 batch-by-batch against an ACCUMULATING store
@@ -18,7 +16,6 @@ each stage's admitted set into the next stage's store side.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import functions as F
@@ -28,6 +25,7 @@ from ..operators import dedup as D
 from ..sources.testdata import load_table
 from ..streaming.stream import incremental_dedup_stream
 from .registry import register
+from .staging import stage_batch
 from .shared_sql import SH as _SH
 
 _THRESH = 0.7
@@ -96,19 +94,9 @@ def _stage_batches(spark, docs, root: str) -> str:
     """Write each incoming batch as ONE parquet file with pinned mtimes
     so FileStreamSource's (mtime, path) order fixes batch order."""
     staged = os.path.join(root, "incoming")
-    os.makedirs(staged, exist_ok=True)
-    base = 1_600_000_000
     for i in range(_N_BATCHES):
         batch = docs.where(F.expr(_batch_pred_spark(i))).select("doc_id", "text")
-        tmp = os.path.join(root, f"tmp_{i}")
-        batch.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p for p in os.listdir(tmp) if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dst = os.path.join(staged, f"b{i}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (base + i, base + i))
-        shutil.rmtree(tmp)
+        stage_batch(batch, staged, i)
     return staged
 
 

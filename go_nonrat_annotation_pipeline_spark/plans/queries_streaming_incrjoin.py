@@ -1,5 +1,4 @@
-"""Streaming JOIN-view maintenance — round-7 trailing module,
-registered AFTER WINDOW_R7.
+"""Streaming JOIN-view maintenance.
 
 The streaming twin of q_incremental_join_maintain: ONE stream carries
 tagged insert rows for BOTH join sides (the realistic CDC feed), and
@@ -28,6 +27,7 @@ from pyspark.sql import functions as F
 from ..operators.incrjoin import delta_join
 from ..sources.testdata import load_table
 from .registry import register
+from .staging import stage_batch
 
 _N_BATCHES = 3
 
@@ -100,20 +100,10 @@ def stream_incremental_join(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="stream_ivm_")
     try:
         staged = os.path.join(root, "feed")
-        os.makedirs(staged)
-        base = 1_600_000_000
         for i in range(_N_BATCHES):
-            tmp = os.path.join(root, f"tmp_{i}")
-            feed.where(
-                f"(k + sub) % {_N_BATCHES} = {i}"
-            ).coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
+            stage_batch(
+                feed.where(f"(k + sub) % {_N_BATCHES} = {i}"), staged, i
             )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
         stream = (
             spark.readStream.schema(
                 "side string, k long, attr string, qty long, sub long"

@@ -1,5 +1,4 @@
-"""Streaming exact top-k join — round-12 module, registered AFTER
-WINDOW_R12 (leads round 13).
+"""Streaming exact top-k join.
 
 Stream twin of ``sim_knn_exact_cells``: corpus embeddings arrive in
 micro-batches; the bench is compiled ONCE before the stream into the
@@ -28,6 +27,7 @@ from ..operators.knn_kernel import driver_train_sample, topk_candidate_ids
 from ..operators.similarity import _as_double
 from ..sources.testdata import load_table
 from .registry import register
+from .staging import stage_batch
 from .queries_semantic_decontam import _CTES
 
 _K_CELLS = 8
@@ -114,8 +114,6 @@ def stream_knn_exact(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="stream_knn_")
     try:
         staged = os.path.join(root, "emb")
-        os.makedirs(staged)
-        base = 1_600_000_000
         # one corpus scan serves all three staged batch files
         corpus = (
             emb.where("label != 0")
@@ -123,17 +121,7 @@ def stream_knn_exact(spark, sf_dir):
             .localCheckpoint()
         )
         for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            corpus.where(f"vec_id % 3 = {i}").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
+            stage_batch(corpus.where(f"vec_id % 3 = {i}"), staged, i)
         stream = (
             spark.readStream.schema("vec_id long, embedding array<float>")
             .option("maxFilesPerTrigger", 1)

@@ -1,5 +1,4 @@
-"""Streaming late-data watermark audit (streaming/late.py) — round-7
-trailing module, registered AFTER WINDOW_R7.
+"""Streaming late-data watermark audit (streaming/late.py).
 
 The stream is the events log split into three ARRIVAL-ordered
 micro-batches by event_id modulus (arrival order deliberately ≠
@@ -21,6 +20,7 @@ import tempfile
 from ..sources.testdata import load_table
 from ..streaming.late import late_data_audit
 from .registry import register
+from .staging import stage_batch
 
 _N_BATCHES = 3
 _DELAY_US = 3_600_000_000  # 1 hour allowed lateness
@@ -30,23 +30,11 @@ def _stage_by_arrival(spark, events, root: str) -> str:
     """Write the events log as _N_BATCHES mtime-pinned parquet files
     split by event_id % _N_BATCHES (arrival order, NOT time order)."""
     staged = os.path.join(root, "events")
-    os.makedirs(staged, exist_ok=True)
-    base = 1_600_000_000
     for i in range(_N_BATCHES):
         batch = events.where(
             f"event_id % {_N_BATCHES} = {i}"
         ).select("event_id", "ts")
-        tmp = os.path.join(root, f"tmp_{i}")
-        batch.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p
-            for p in os.listdir(tmp)
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dst = os.path.join(staged, f"b{i}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (base + i, base + i))
-        shutil.rmtree(tmp)
+        stage_batch(batch, staged, i)
     return staged
 
 

@@ -1,5 +1,4 @@
-"""Streaming priority sample — round-9 trailing module, registered
-AFTER WINDOW_R9.
+"""Streaming priority sample.
 
 The stream twin of q_priority_sample: the budget-k weighted sample is
 maintained across micro-batches by keeping the running top-(k+1) rows

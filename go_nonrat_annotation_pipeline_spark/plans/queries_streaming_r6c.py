@@ -1,6 +1,5 @@
-"""Streaming twins of the round-6c operators — registered AFTER the
-round-6 window (plans/registry.py); verified by tools/compare.py
-locally this round, candidates for the round-7 rotation.
+"""Streaming twins of the Hamming-dedup and incremental-aggregate
+operators.
 
 - ``stream_hamming_dedup``: the Hamming-admission mirror of
   stream_incremental_dedup — order-DEPENDENT (later batches dedup
@@ -16,7 +15,6 @@ locally this round, candidates for the round-7 rotation.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import functions as F
@@ -27,6 +25,7 @@ from ..operators.diff import snapshot_diff
 from ..sources.testdata import load_table
 from .queries_incragg import _snapshots
 from .registry import register
+from .staging import stage_batch
 
 _MAXD = 4
 _N_BATCHES = 3
@@ -87,23 +86,11 @@ def _stage_batches(spark, docs, root: str) -> str:
     """One parquet file per batch with pinned mtimes (FileStreamSource
     processes files in (mtime, path) order with maxFilesPerTrigger=1)."""
     staged = os.path.join(root, "incoming")
-    os.makedirs(staged, exist_ok=True)
-    base = 1_600_000_000
     for i in range(_N_BATCHES):
         batch = docs.where(F.expr(_batch_pred_spark(i))).select(
             "doc_id", "text"
         )
-        tmp = os.path.join(root, f"tmp_{i}")
-        batch.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p
-            for p in os.listdir(tmp)
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dst = os.path.join(staged, f"b{i}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (base + i, base + i))
-        shutil.rmtree(tmp)
+        stage_batch(batch, staged, i)
     return staged
 
 

@@ -1,6 +1,4 @@
-"""Streaming SCD2 dimension-maintenance query
-(streaming/scd_stream.py) — registered AFTER the round-6 window;
-round-7 rotation candidate.
+"""Streaming SCD2 dimension-maintenance query (streaming/scd_stream.py).
 
 The maintained ≡ recompute contract, proved by the oracle: the stream
 is the events log split into three time-ordered micro-batches (pinned
@@ -23,6 +21,7 @@ from ..operators import scd as SCD
 from ..sources.testdata import load_table
 from ..streaming.scd_stream import scd2_dimension_stream
 from .registry import register
+from .staging import stage_batch
 
 _N_BATCHES = 3
 
@@ -33,28 +32,16 @@ def _stage_time_ordered(spark, events, root: str) -> str:
     order), split at global (ts, event_id) rank terciles — staging
     only, the operator under test never sees a global sort."""
     staged = os.path.join(root, "events")
-    os.makedirs(staged, exist_ok=True)
     n = events.count()
     ranked = events.withColumn(
         "_rn",
         F.row_number().over(Window.orderBy("ts", "event_id")),
     ).withColumn("_b", ((F.col("_rn") - 1) * _N_BATCHES / n).cast("int"))
-    base = 1_600_000_000
     for i in range(_N_BATCHES):
         batch = ranked.where(F.col("_b") == i).select(
             "event_id", "user_id", "ts", "event_type"
         )
-        tmp = os.path.join(root, f"tmp_{i}")
-        batch.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            p
-            for p in os.listdir(tmp)
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dst = os.path.join(staged, f"b{i}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (base + i, base + i))
-        shutil.rmtree(tmp)
+        stage_batch(batch, staged, i)
     return staged
 
 

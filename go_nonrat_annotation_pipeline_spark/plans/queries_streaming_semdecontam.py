@@ -1,5 +1,4 @@
-"""Streaming semantic-decontamination gate — round-10 trailing module,
-registered AFTER WINDOW_R10; leads round 11.
+"""Streaming semantic-decontamination gate.
 
 The stream twin of q_semantic_decontam, completing the gate matrix
 (n-gram batch / n-gram stream / semantic batch / semantic stream):
@@ -26,6 +25,7 @@ from ..operators.dedup import cosine
 from ..operators.similarity import _as_double
 from ..sources.testdata import load_table
 from .registry import register
+from .staging import stage_batch
 from .queries_semantic_decontam import _CTES, _TH_6DP
 
 
@@ -91,21 +91,9 @@ def stream_semantic_decontam_gate(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="stream_semdecontam_")
     try:
         staged = os.path.join(root, "emb")
-        os.makedirs(staged)
-        base = 1_600_000_000
         corpus = emb.where("label != 0").select("vec_id", "embedding")
         for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            corpus.where(f"vec_id % 3 = {i}").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
+            stage_batch(corpus.where(f"vec_id % 3 = {i}"), staged, i)
         stream = (
             spark.readStream.schema("vec_id long, embedding array<float>")
             .option("maxFilesPerTrigger", 1)

@@ -1,9 +1,8 @@
-"""Streaming exact-ANN decontamination gate — round-12 module,
-registered AFTER WINDOW_R12 (leads round 13).
+"""Streaming exact-ANN decontamination gate.
 
 Completes the gate matrix's last cell: the batch ANN gate
 (``q_semantic_decontam_ann``) has a brute-force stream twin
-(``stream_semantic_decontam_gate``, frozen) that crossJoins every
+(``stream_semantic_decontam_gate``) that crossJoins every
 micro-batch against the ENTIRE broadcast bench — per-trigger cost
 B cosines per item. Here the bench is compiled ONCE before the stream
 into lossless ball-pruned cells (capped-sample train, map-side bench
@@ -32,6 +31,7 @@ from ..operators.knn_kernel import driver_train_sample, gate_candidate_ids
 from ..operators.similarity import _as_double
 from ..sources.testdata import load_table
 from .registry import register
+from .staging import stage_batch
 from .queries_semantic_decontam import _CTES, _TH_6DP
 
 _K_CELLS = 8
@@ -126,8 +126,6 @@ def stream_semantic_decontam_gate_ann(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="stream_semdecontam_ann_")
     try:
         staged = os.path.join(root, "emb")
-        os.makedirs(staged)
-        base = 1_600_000_000
         # one corpus scan serves all three staged batch files
         corpus = (
             emb.where("label != 0")
@@ -135,17 +133,7 @@ def stream_semantic_decontam_gate_ann(spark, sf_dir):
             .localCheckpoint()
         )
         for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            corpus.where(f"vec_id % 3 = {i}").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
+            stage_batch(corpus.where(f"vec_id % 3 = {i}"), staged, i)
         stream = (
             spark.readStream.schema("vec_id long, embedding array<float>")
             .option("maxFilesPerTrigger", 1)

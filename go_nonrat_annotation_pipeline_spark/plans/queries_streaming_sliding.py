@@ -1,6 +1,4 @@
-"""Sliding-window streaming aggregation — round-4 addition, registered
-INSIDE the driver's correctness window (the other streaming rows,
-r3-green, stay in queries_streaming.py outside it).
+"""Sliding-window streaming aggregation.
 
 Oracle: each event belongs to exactly window/slide = 2 sliding windows
 (1h window, 30min hop), so the batch equivalent is a UNION ALL of the

@@ -1,5 +1,4 @@
-"""Watermark-TTL streaming dedup — round-10 trailing module,
-registered AFTER WINDOW_R10; leads round 11.
+"""Watermark-TTL streaming dedup.
 
 `dropDuplicatesWithinWatermark` (Spark 3.5+) is the production answer
 to unbounded dedup state: duplicates of a key are dropped while its
@@ -28,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..sources.testdata import load_table
 from .registry import register
+from .staging import stage_batch
 
 _ORACLE = """
     WITH wmd_sub AS (
@@ -96,20 +96,8 @@ def stream_dedup_within_watermark(spark, sf_dir):
     root = tempfile.mkdtemp(prefix="stream_wmdedup_")
     try:
         staged = os.path.join(root, "f")
-        os.makedirs(staged)
-        base = 1_600_000_000
         for i in range(3):
-            tmp = os.path.join(root, f"tmp_{i}")
-            feed.where(f"b = {i}").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            part = next(
-                p for p in os.listdir(tmp) if p.endswith(".parquet")
-            )
-            dst = os.path.join(staged, f"b{i}.parquet")
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (base + i, base + i))
-            shutil.rmtree(tmp)
+            stage_batch(feed.where(f"b = {i}"), staged, i)
         stream = (
             spark.readStream.schema(
                 "user_id long, event_type string, ts timestamp, "

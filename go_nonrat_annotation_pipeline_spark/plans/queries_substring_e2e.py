@@ -1,6 +1,4 @@
-"""Substring-dedup E2E composite — registered AFTER the round-6 window
-(plans/registry.py); verified by tools/compare.py locally this round,
-candidate for the round-7 rotation.
+"""Substring-dedup E2E composite.
 
 The Lee-et-al-then-Manku funnel a crawl actually runs, as ONE query:
 

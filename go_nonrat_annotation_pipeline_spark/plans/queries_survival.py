@@ -1,5 +1,4 @@
-"""Kaplan-Meier survival curve over user lifetimes — round-13 module,
-registered AFTER WINDOW_R13 (leads round 14).
+"""Kaplan-Meier survival curve over user lifetimes.
 
 Retention analysis the cohort family (q_cohort_retention) approximates
 with fixed windows: the Kaplan-Meier estimator

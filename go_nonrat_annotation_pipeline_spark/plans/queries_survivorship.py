@@ -1,6 +1,4 @@
-"""Golden-record survivorship queries (operators/survivorship.py) —
-round-9 trailing module, registered AFTER WINDOW_R9; round-10/11
-rotation fill.
+"""Golden-record survivorship queries (operators/survivorship.py).
 
 Clusters are deterministic triples of customer records (c_custkey DIV
 3) standing in for an ER output (the cluster ids from

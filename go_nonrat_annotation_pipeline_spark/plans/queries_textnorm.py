@@ -1,5 +1,4 @@
-"""Text-canonicalization queries (operators/textnorm.py) — round-7
-trailing module, registered AFTER WINDOW_R7.
+"""Text-canonicalization queries (operators/textnorm.py).
 
 The synthetic documents are ASCII-clean, so each query first INJECTS
 the defect it canonicalizes (combining marks / doubled spaces) by

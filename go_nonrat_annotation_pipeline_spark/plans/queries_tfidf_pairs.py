@@ -1,5 +1,4 @@
-"""Sparse TF-IDF cosine similarity join — round-13 module, registered
-AFTER WINDOW_R13 (leads round 14).
+"""Sparse TF-IDF cosine similarity join.
 
 The similarity family's pair joins are DENSE-vector (embedding cosine,
 exact cell-pruned) or token-set (minhash/PPJoin Jaccard); this adds the

@@ -1,5 +1,4 @@
-"""Truncated EWMA smoothing + inter-arrival burstiness — round-13
-module, registered AFTER WINDOW_R13 (leads round 14).
+"""Truncated EWMA smoothing + inter-arrival burstiness.
 
 Extends the monitoring family (CUSUM/KS/PSI detect SHIFTS; these two
 characterize the series itself):

@@ -1,5 +1,4 @@
-"""TPC-H Q3 (shipping priority) — round-13 module, registered AFTER
-WINDOW_R13 (leads round 14).
+"""TPC-H Q3 (shipping priority).
 
 Widens the canonical-relational coverage next to q1 (pricing summary)
 and q5 (multiway join-agg): the segment-filtered customer–orders–

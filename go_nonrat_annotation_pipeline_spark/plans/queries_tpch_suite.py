@@ -1,5 +1,4 @@
-"""TPC-H suite widening, part 1 (Q4/Q10/Q12/Q14 adapted) — round-13
-module, registered AFTER WINDOW_R13 (leads round 14).
+"""TPC-H suite widening, part 1 (Q4/Q10/Q12/Q14 adapted).
 
 q1/q3/q5 established the canonical-relational line; this module adds
 the four next shapes a warehouse engine must get right, adapted to the

@@ -1,5 +1,4 @@
-"""TPC-H suite widening, part 2 (Q7/Q18/Q19/Q22 adapted) — round-13
-module, registered AFTER WINDOW_R13 (leads round 14).
+"""TPC-H suite widening, part 2 (Q7/Q18/Q19/Q22 adapted).
 
 Completes the session's canonical-relational batch (part 1:
 queries_tpch_suite.py) with the four remaining classic shapes the

@@ -1,7 +1,6 @@
 """Training-split E2E: benchmark decontamination → leakage-safe
 cluster-keyed splitting → per-(split, source) corpus funnel, as ONE
-query with a chained-CTE oracle — round-9 trailing module, registered
-AFTER WINDOW_R9; round-10 rotation fill.
+query with a chained-CTE oracle.
 
 The last governance gate before handing data to a trainer: drop every
 doc sharing an 8-gram with the benchmark, split what remains by the

@@ -1,5 +1,4 @@
-"""Event-sequence transition analytics over `events` — round-7
-trailing module, registered AFTER WINDOW_R7.
+"""Event-sequence transition analytics over `events`.
 
 The Markov-chain view of a clickstream: per-user event sequences
 (ordered by ts with event_id tiebreak — the repo's standard

@@ -1,6 +1,4 @@
-"""Data-validation / compliance queries — registered AFTER the round-4
-correctness window (plans/registry.py); verified by tools/compare.py
-locally this round, lead the round-5 rotation.
+"""Data-validation / compliance queries.
 
 The expectations-report shape (dbt-test / Great Expectations family): a
 pipeline asserts nullability, ranges, uniqueness, and referential

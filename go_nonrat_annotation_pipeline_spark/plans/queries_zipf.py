@@ -1,5 +1,4 @@
-"""Zipf-law fit over the term frequency distribution — round-13
-module, registered AFTER WINDOW_R13 (leads round 14).
+"""Zipf-law fit over the term frequency distribution.
 
 Corpus-health diagnostic the text family lacked: natural text follows
 freq(rank) ∝ rank^(-s) with s ≈ 1; a fitted exponent far from 1 flags

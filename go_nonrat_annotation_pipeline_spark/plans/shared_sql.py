@@ -1,13 +1,9 @@
 """Shared DuckDB-oracle SQL fragments used by more than one plans module.
 
-This module REGISTERS NOTHING and must never import `registry`: the
-driver's correctness window covers the first 50 registered queries in
-import order (plans/registry.py), so a cross-module constant import that
-drags a whole registering module in early silently reshuffles the
-window. Round 3 lost 7 window slots to exactly that (queries_dedup /
-queries_similarity registered at first touch from the *_attested /
-*_ann modules); keeping the shared fragments here keeps registration
-order fully under registry.py's control.
+This module registers nothing and never imports `registry`: a
+cross-module constant import that drags a whole registering module in
+early would reorder registration, so shared fragments live here and
+registration order stays under registry.py's control.
 """
 
 from __future__ import annotations

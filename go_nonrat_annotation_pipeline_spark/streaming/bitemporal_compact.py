@@ -1,11 +1,11 @@
 """Policy-compacted durable bitemporal store (VERDICT r10 Next #6).
 
-``streaming/bitemporal_stream.py`` (frozen — backs a WINDOW_R11 row)
+``streaming/bitemporal_stream.py``
 appends every assertion forever, so like the pre-compaction IVM store
 it grows with CORRECTION HISTORY, not with the live key set: N rounds
 of churn to the same keys = N partitions, and every view read resolves
 all of them. This module composes the ivm_policy pattern from the
-outside (the streaming/ivm_compact.py new-module discipline): the
+outside: the
 resolve + run-collapse of ``operators/bitemporal.bitemporal_history``
 IS the fold.
 
@@ -68,7 +68,7 @@ def knowledge_horizon(store_dir: str) -> int | None:
 
 def read_assertions_carry(spark: SparkSession, store_dir: str) -> DataFrame:
     """All assertions with the fold-carry column (``n_absorbed`` = 0 on
-    live partitions, which the frozen handler writes without it)."""
+    live partitions, which the append handler writes without it)."""
     base = spark.createDataFrame([], ASSERT_SCHEMA)
     schema = StructType(
         list(base.schema.fields)
@@ -158,7 +158,7 @@ def bitemporal_view_compacted(
     byte-identical to the uncompacted view for every reconstructible
     cutoff, including the ``n_superseded`` audit column.
 
-    Resolve + run-collapse are delegated to the frozen operator; the
+    Resolve + run-collapse are delegated to the batch operator; the
     only fold-aware step is adding each interval-start's carried
     absorbed count back onto ``n_superseded`` (a seed-partition-sized
     broadcast join — n_absorbed > 0 exists only on seed rows)."""
@@ -203,7 +203,7 @@ def make_compacting_bitemporal_handler(
     check_every: int = 8,
     audit: list | None = None,
 ):
-    """The frozen append handler wrapped with the ivm_policy batch-
+    """The append handler wrapped with the ivm_policy batch-
     boundary compaction policy; ``audit`` collects
     (batch_id, rows_before, rows_after)."""
     inner = make_bitemporal_handler(spark, store_dir)

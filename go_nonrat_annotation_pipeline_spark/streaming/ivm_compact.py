@@ -1,10 +1,8 @@
 """Signed-store compaction for the retraction IVM (VERDICT r8,
 What's missing #3).
 
-Lives in its OWN module: streaming/ivm_retract.py and
-operators/incrjoin_retract.py back two WINDOW_R9 rows and are frozen
-for the round (plans/registry.py freeze rule), so the compaction path
-composes with them from the outside.
+The compaction path composes with streaming/ivm_retract.py and
+operators/incrjoin_retract.py from the outside.
 
 The retraction stores are append-only logs of signed rows (a delete is
 a −1 row, never an in-place update — the object-store-friendly write

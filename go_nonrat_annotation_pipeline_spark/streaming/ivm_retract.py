@@ -1,8 +1,7 @@
 """Durable streaming join-view maintenance WITH deletes.
 
-The retraction extension of streaming/ivm_store.py (left byte-intact —
-its insert-only contract is the attested shape; VERDICT r7 #7 asked for
-the CDC-delete path as the next step). Feed rows carry
+The retraction extension of streaming/ivm_store.py (which keeps its
+insert-only contract). Feed rows carry
 (side 'L'|'R', op 'I'|'D', k, attr, qty); everything else follows the
 ivm_store recovery contract verbatim:
 

@@ -25,9 +25,6 @@ Cost per batch: O(|batch| + |keys|) — the closed history is appended
 to, never rescanned. State lives in localCheckpointed DataFrames with
 a per-batch repartition guard (looped unionByName otherwise doubles
 partition counts every batch).
-
-This module is NEW in the round-6 continuation so the frozen
-streaming/stream.py (backing WINDOW_R6 rows) stays byte-identical.
 """
 
 from __future__ import annotations

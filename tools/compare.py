@@ -10,10 +10,11 @@ Usage:  python tools/compare.py [sf_dir] [query ...]
 
 ``--sample N`` runs a deterministic pseudo-random N-query subset of the
 registry (seeded by ``--seed``, default 0) — a fast spot-check mode for
-reviewers who don't want the full ~15-minute sweep. On any mismatch the
-harness prints BOTH engines' per-column dtypes next to the differing
-values (the round-5 ask: every type-boundary red so far was invisible
-in the values and obvious in the types).
+reviewers who don't want the full sweep (about 14 minutes at sf0.01 on
+a 4-core host). On any mismatch the harness prints BOTH engines'
+per-column dtypes next to the differing values (the round-5 ask: every
+type-boundary red so far was invisible in the values and obvious in the
+types).
 """
 
 from __future__ import annotations
